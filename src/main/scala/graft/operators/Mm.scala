@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Multimodal column plumbing: image/audio/video payloads ride as opaque
   * `binary` columns with typed metadata alongside.
@@ -1127,32 +1127,59 @@ object Mm {
         min("blob_bytes").as("blob_bytes"),
         min(col("decoded_w") * 1024 + col("decoded_h")).as("phash_bucket"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** dHash-bit replay straight from the 72×64 CELL formula (the
+    * brightness shift cancels in the gradient; v = 16+24q is monotone
+    * in q), then the banded pigeonhole + cap — shared verbatim by the
+    * JPEG query (lossy round trip must reproduce the bits) and the
+    * cross-container query (both containers must reproduce them). */
+  private lazy val cellPerceptOracle: String =
+    s"""WITH cells AS (SELECT doc_id, cy, cx, (((doc_id % 167) * 31 + cy * 7 + cx * 13) % 97) % 8 AS gv FROM documents, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx)), bits AS (SELECT a.doc_id, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), bands AS (SELECT doc_id, idx // 16 AS b, string_agg(bit::VARCHAR, '' ORDER BY idx) AS s FROM bits GROUP BY doc_id, idx // 16), bandc AS (SELECT doc_id, b, s FROM (SELECT *, row_number() OVER (PARTITION BY b, s ORDER BY doc_id) AS _rn FROM bands) WHERE _rn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandc a JOIN bandc b ON a.b = b.b AND a.s = b.s AND a.doc_id < b.doc_id), ham AS (SELECT c.id_a, c.id_b, sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)::BIGINT AS hamming FROM cand c JOIN bits x ON x.doc_id = c.id_a JOIN bits y ON y.doc_id = c.id_b AND y.idx = x.idx GROUP BY c.id_a, c.id_b) SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""
+
+  val queries: Seq[Query] = Seq(
     // exact payload dedup + the perceptual-bucket near-dup front-end
-    "mm_dedup_binary" -> ((s, d) =>
+    // oracle: md5-grain collapse + the FakeDecoder dim-bucket arithmetic
+    Query("mm_dedup_binary", corpusGrain = true, Some(
+      """WITH m AS (SELECT doc_id, octet_length(encode(text))::BIGINT AS blob_bytes, md5(text) AS blob_md5 FROM documents) SELECT blob_md5, min(doc_id) AS keep_id, count(*)::BIGINT AS n_copies, min(blob_bytes) AS blob_bytes, min((64 + blob_bytes % 512) * 1024 + (64 + (blob_bytes * 7) % 512)) AS phash_bucket FROM m GROUP BY blob_md5 ORDER BY blob_md5""")) { (s, d) =>
       dedupBinary(withBlob(Tables.documents(s, d), "doc_id", "text"))
-        .orderBy("blob_md5")),
+        .orderBy("blob_md5")
+    },
 
     // perceptual near-dup pairs: real PNG pixel decode (Inflater +
     // unfilter) → dHash → hamming-block bucketing; the oracle replays
     // the hash positions from the fixture pixel FORMULA, so the codec
     // path must reproduce the formula through a real compression
     // container to match
-    "mm_dedup_percept" -> ((s, d) =>
+    Query("mm_dedup_percept", corpusGrain = true, Some(
+      s"""WITH px AS (SELECT doc_id, y, x, ((((doc_id % 167) * 31 + y * 7 + x * 13) % 17) * 13 + ((doc_id // 167) % 4) * 7)::BIGINT AS v FROM documents, generate_series(0, 11) g1(y), generate_series(0, 15) g2(x)), cells AS (SELECT doc_id, (8 * y + 19) // 12 - 1 AS cy, (9 * x + 24) // 16 - 1 AS cx, sum(v) // count(*) AS gv FROM px GROUP BY doc_id, (8 * y + 19) // 12 - 1, (9 * x + 24) // 16 - 1), bits AS (SELECT a.doc_id, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), bands AS (SELECT doc_id, idx // 16 AS b, string_agg(bit::VARCHAR, '' ORDER BY idx) AS s FROM bits GROUP BY doc_id, idx // 16), bandc AS (SELECT doc_id, b, s FROM (SELECT *, row_number() OVER (PARTITION BY b, s ORDER BY doc_id) AS _rn FROM bands) WHERE _rn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandc a JOIN bandc b ON a.b = b.b AND a.s = b.s AND a.doc_id < b.doc_id), ham AS (SELECT c.id_a, c.id_b, sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)::BIGINT AS hamming FROM cand c JOIN bits x ON x.doc_id = c.id_a JOIN bits y ON y.doc_id = c.id_b AND y.idx = x.idx GROUP BY c.id_a, c.id_b) SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b""")) { (s, d) =>
       dedupPercept(synthesizePixelPngs(  // decode-heavy: fan the scan out
         graft.Par.fanOut(Tables.documents(s, d), col("doc_id")), "doc_id"))
-        .orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b")
+    },
 
     // the JPEG (dominant crawl container) perceptual near-dup pass: a
     // REAL lossy round trip — ImageIO JPEG encode of formula cells,
     // ImageIO decode + dHash back — against an oracle that replays the
     // hash bits from the cell FORMULA; block-aligned flat cells with
     // >=72-level margins make every gradient sign survive quantization
-    "mm_dedup_percept_jpeg" -> ((s, d) =>
+    // oracle: replays the dHash BIT POSITIONS from the fixture pixel formula
+    // (16×12 grayscale, 9×8 floor-boundary box averages, bit = right
+    // cell > left cell) and the 16-bit-block candidate pigeonhole with
+    // the same lowest-id bucket cap — the Spark side must reproduce all
+    // of it THROUGH the real container decode (Inflater + unfilter) to
+    // hash-match. Cell assignment inverts the floor boundaries:
+    // cx = ceil(9(x+1)/16)-1, cy = ceil(8(y+1)/12)-1.
+    // replays the JPEG fixture's dHash bits straight from the CELL
+    // formula (the brightness shift cancels in the gradient; v = 16+24q
+    // is monotone in q so comparing q replays comparing pixels), then
+    // the same banded pigeonhole + cap as mm_dedup_percept. The engine
+    // must reproduce these bits through a real DCT/quantization round
+    // trip to hash-match.
+    Query("mm_dedup_percept_jpeg", corpusGrain = true, Some(cellPerceptOracle)) { (s, d) =>
       dedupPercept(synthesizeGrayJpegs(
         graft.Par.fanOut(Tables.documents(s, d), col("doc_id")), "doc_id"),
         hashOf = graft.functions.GraftFunctions.jpegDhash)
-        .orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b")
+    },
 
     // CROSS-CONTAINER perceptual dedup: fifths of the corpus are PNG,
     // JPEG, GIF, BMP and TIFF re-encodes of the SAME cell-formula
@@ -1162,7 +1189,10 @@ object Mm {
     // hash space and pairs freely cross every container boundary (the
     // oracle is container-blind: one formula for all docs; a decoder
     // drifting between containers hash-fails)
-    "mm_dedup_percept_cross" -> ((s, d) => {
+    // oracle: container-blind by construction: the SAME cell formula governs
+    // the PNG, JPEG and GIF thirds, so the identical oracle applies —
+    // the engine must agree with it through all THREE containers at once
+    Query("mm_dedup_percept_cross", corpusGrain = true, Some(cellPerceptOracle)) { (s, d) =>
       val ids = Tables.documents(s, d)
         .select(col("doc_id").cast("bigint").as("doc_id"))
       val blobs = synthesizeCellPngs(ids.filter(col("doc_id") % 5 === 0), "doc_id")
@@ -1177,17 +1207,20 @@ object Mm {
         graft.functions.GraftFunctions.bmpDhash(c),
         graft.functions.GraftFunctions.tiffDhash(c)))
         .orderBy("id_a", "id_b")
-    }),
+    },
 
     // the GIF (legacy-web / icon / meme container) perceptual near-dup
     // pass: a REAL ImageIO LZW round trip — GIF write of the formula
     // cells, palette decode + dHash back; GIF is lossless at ≤256
     // colors so the container-blind cell oracle applies unchanged
-    "mm_dedup_percept_gif" -> ((s, d) =>
+    // oracle: lossless LZW round trip: the identical cell oracle, reached
+    // through the ImageIO GIF write + palette decode
+    Query("mm_dedup_percept_gif", corpusGrain = true, Some(cellPerceptOracle)) { (s, d) =>
       dedupPercept(synthesizeCellGifs(
         graft.Par.fanOut(Tables.documents(s, d), col("doc_id")), "doc_id"),
         hashOf = graft.functions.GraftFunctions.gifDhash)
-        .orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b")
+    },
 
     // BMP + TIFF join the one hash space (r12): halves of the corpus
     // are 24bpp BMP (row order alternating bottom-up/top-down by id)
@@ -1196,7 +1229,7 @@ object Mm {
     // container-blind cell oracle applies unchanged, pairs cross the
     // container boundary freely, and a decoder mishandling either
     // row-order or strip walk hash-fails
-    "mm_dedup_percept_bmp_tiff" -> ((s, d) => {
+    Query("mm_dedup_percept_bmp_tiff", corpusGrain = true, Some(cellPerceptOracle)) { (s, d) =>
       val ids = Tables.documents(s, d)
         .select(col("doc_id").cast("bigint").as("doc_id"))
       val blobs = synthesizeCellBmps(ids.filter(col("doc_id") % 2 === 0), "doc_id")
@@ -1205,43 +1238,81 @@ object Mm {
         graft.functions.GraftFunctions.bmpDhash(c),
         graft.functions.GraftFunctions.tiffDhash(c)))
         .orderBy("id_a", "id_b")
-    }),
+    },
 
     // the perceptual-coverage report over a mixed-container corpus:
     // which payloads the percept decoders can actually see, by container
-    "mm_percept_coverage" -> ((s, d) =>
+    // oracle: coverage ground truth from the mixed-corpus branch arithmetic:
+    // fifth 0 = decodable pixel PNG, 1 = decodable JPEG, 2 = the
+    // header-only containers of synthesizeMedia (undecodable), 3 = raw
+    // text, 4 = decodable cell GIF. The engine must DECODE its way to
+    // the same counts.
+    Query("mm_percept_coverage", corpusGrain = false, Some(
+      """WITH g AS (SELECT doc_id, CASE WHEN doc_id % 5 = 0 THEN 'png' WHEN doc_id % 5 = 1 THEN 'jpeg' WHEN doc_id % 5 = 4 THEN 'gif' WHEN doc_id % 5 = 2 AND doc_id % 3 = 0 THEN 'png' WHEN doc_id % 5 = 2 AND doc_id % 3 = 1 THEN 'jpeg' ELSE 'other' END AS container, CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS png_ok, CASE WHEN doc_id % 5 = 1 THEN 1 ELSE 0 END AS jpeg_ok, CASE WHEN doc_id % 5 = 4 THEN 1 ELSE 0 END AS gif_ok FROM documents) SELECT container, count(*)::BIGINT AS n_payloads, sum(png_ok)::BIGINT AS n_png_dhash, sum(jpeg_ok)::BIGINT AS n_jpeg_dhash, sum(gif_ok)::BIGINT AS n_gif_dhash, sum(CASE WHEN png_ok = 1 OR jpeg_ok = 1 OR gif_ok = 1 THEN 1 ELSE 0 END)::BIGINT AS n_percept, (sum(CASE WHEN png_ok = 1 OR jpeg_ok = 1 OR gif_ok = 1 THEN 1 ELSE 0 END) * 10000 // count(*))::BIGINT AS coverage_bp FROM g GROUP BY container ORDER BY container""")) { (s, d) =>
       perceptCoverage(mixedPerceptCorpusGif(Tables.documents(s, d), "doc_id", "text"))
-        .orderBy("container")),
+        .orderBy("container")
+    },
 
     // the MULTIMODAL FLAGSHIP: exact dedup -> cross-container percept
     // dedup -> vision/ws token budget -> packing, one plan, one oracle
-    "mm_pipeline_e2e" -> ((s, d) =>
+    // oracle: the flagship replayed end to end from the corpus-construction
+    // formulas: byte-equality keys per branch — the EXACT determinants
+    // of each branch's bytes: the pixel formulas read pat only through
+    // pat mod 17 (PNG) / mod 97 (JPEG), so those residues ARE the key
+    // (31 is invertible mod both, making the map bijective); media keys
+    // carry the 256-char truncation and the raw third collides with the
+    // raw quarter byte-for-byte — plus BOTH dHash-bit families (pixel
+    // 16×12 box grid for the PNG quarter, 72×64 cells for the JPEG
+    // quarter) through the shared banded pigeonhole, keep-first drop,
+    // per-branch token budgets, and the shard-local pack prefix sums
+    Query("mm_pipeline_e2e", corpusGrain = true, Some(
+      raw"""WITH base AS (SELECT doc_id, text, CASE WHEN doc_id % 4 = 0 THEN 'a|' || ((doc_id % 167) % 17) || '|' || ((doc_id // 167) % 4) WHEN doc_id % 4 = 1 THEN 'b|' || ((doc_id % 167) % 97) || '|' || ((doc_id // 167) % 4) WHEN doc_id % 4 = 2 AND doc_id % 3 = 0 THEN 'c0|' || (doc_id % 900) || '|' || ((doc_id * 3) % 900) || '|' || substr(text, 1, 256) WHEN doc_id % 4 = 2 AND doc_id % 3 = 1 THEN 'c1|' || (doc_id % 900) || '|' || ((doc_id * 3) % 900) || '|' || (doc_id % 6) || '|' || (doc_id % 4) || '|' || substr(text, 1, 256) WHEN doc_id % 4 = 2 THEN 'd|' || substr(text, 1, 256) ELSE 'd|' || text END AS bkey FROM documents), g AS (SELECT doc_id, text, bkey, count(*) OVER (PARTITION BY bkey) AS n_copies, min(doc_id) OVER (PARTITION BY bkey) AS keeper FROM base), k1 AS (SELECT doc_id, text, n_copies FROM g WHERE doc_id = keeper), pxb AS (SELECT doc_id, y, x, ((((doc_id % 167) * 31 + y * 7 + x * 13) % 17) * 13 + ((doc_id // 167) % 4) * 7)::BIGINT AS v FROM k1, generate_series(0, 11) g1(y), generate_series(0, 15) g2(x) WHERE doc_id % 4 = 0), pxc AS (SELECT doc_id, (8 * y + 19) // 12 - 1 AS cy, (9 * x + 24) // 16 - 1 AS cx, sum(v) // count(*) AS gv FROM pxb GROUP BY 1, 2, 3), jc AS (SELECT doc_id, cy, cx, ((((doc_id % 167) * 31 + cy * 7 + cx * 13) % 97) % 8)::BIGINT AS gv FROM k1, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx) WHERE doc_id % 4 = 1), cells AS (SELECT * FROM pxc UNION ALL SELECT * FROM jc), bits AS (SELECT a.doc_id, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), bands AS (SELECT doc_id, idx // 16 AS b, string_agg(bit::VARCHAR, '' ORDER BY idx) AS s FROM bits GROUP BY doc_id, idx // 16), bandc AS (SELECT doc_id, b, s FROM (SELECT *, row_number() OVER (PARTITION BY b, s ORDER BY doc_id) AS _rn FROM bands) WHERE _rn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandc a JOIN bandc b ON a.b = b.b AND a.s = b.s AND a.doc_id < b.doc_id), ham AS (SELECT c.id_a, c.id_b, sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)::BIGINT AS hamming FROM cand c JOIN bits x ON x.doc_id = c.id_a JOIN bits y ON y.doc_id = c.id_b AND y.idx = x.idx GROUP BY c.id_a, c.id_b), k2 AS (SELECT * FROM k1 WHERE doc_id NOT IN (SELECT id_b FROM ham WHERE hamming <= 3)), tok AS (SELECT doc_id, n_copies, CASE WHEN doc_id % 4 = 0 THEN 'png' WHEN doc_id % 4 = 1 THEN 'jpeg' WHEN doc_id % 4 = 2 AND doc_id % 3 = 0 THEN 'png' WHEN doc_id % 4 = 2 AND doc_id % 3 = 1 THEN 'jpeg' ELSE 'other' END AS container, (CASE WHEN doc_id % 4 = 0 THEN 1 WHEN doc_id % 4 = 1 THEN 20 WHEN doc_id % 4 = 2 AND doc_id % 3 < 2 THEN CAST(ceil((doc_id % 900 + 100) / 16.0) AS BIGINT) * CAST(ceil(((doc_id * 3) % 900 + 100) / 16.0) AS BIGINT) WHEN doc_id % 4 = 2 THEN len(string_split_regex(trim(substr(text, 1, 256)), '\s+')) ELSE len(string_split_regex(trim(text), '\s+')) END)::BIGINT AS total_tokens, doc_id % 8 AS shard FROM k2), pc AS (SELECT *, sum(total_tokens) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - total_tokens AS cum FROM tok) SELECT doc_id, container, n_copies, shard, total_tokens, (cum // 2048)::BIGINT AS pack_id, (cum % 2048)::BIGINT AS pack_offset FROM pc ORDER BY doc_id""")) { (s, d) =>
       pipelineE2e(mixedPerceptCorpus(Tables.documents(s, d), "doc_id", "text"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // the SECOND modality's perceptual near-dup pass: real RIFF/PCM
     // decode → 17-frame × 4-band integer energies → gradient bits, the
     // same hamming-block machinery; gain-ridden copies (same pat,
     // different volume) collapse exactly, and the oracle replays the
     // bits from the sample formula
-    "mm_dedup_percept_audio" -> ((s, d) =>
+    // oracle: replays the audio fingerprint bits from the SAMPLE formula: 17
+    // 32-sample frames, four band energies (|s| and lag-1/2/4 abs
+    // diffs, never crossing a frame edge), bit = band energy rises to
+    // the next frame — then the shared banded pigeonhole + cap. The
+    // engine must parse the RIFF container and re-derive every energy
+    // in exact integer math to hash-match; gain cancels in the
+    // comparisons just as brightness does for the image families.
+    Query("mm_dedup_percept_audio", corpusGrain = true, Some(
+      s"""WITH smp AS (SELECT doc_id, t, t // 32 AS f, ((doc_id // 167) % 3 + 1) * (((((doc_id % 167) * 31 + (t // 32) * 13) % 97) % 9 + 1) * ((t * 37 + (doc_id % 167) * 11) % 7 - 3)) AS s FROM documents, generate_series(0, 543) g(t)), d AS (SELECT doc_id, t, f, s, lag(s, 1) OVER (PARTITION BY doc_id ORDER BY t) AS s1, lag(s, 2) OVER (PARTITION BY doc_id ORDER BY t) AS s2, lag(s, 4) OVER (PARTITION BY doc_id ORDER BY t) AS s4 FROM smp), e AS (SELECT doc_id, f, sum(abs(s))::BIGINT AS e0, sum(CASE WHEN t % 32 >= 1 THEN abs(s - s1) ELSE 0 END)::BIGINT AS e1, sum(CASE WHEN t % 32 >= 2 THEN abs(s - s2) ELSE 0 END)::BIGINT AS e2, sum(CASE WHEN t % 32 >= 4 THEN abs(s - s4) ELSE 0 END)::BIGINT AS e3 FROM d GROUP BY doc_id, f), eb AS (SELECT doc_id, f, b.b, CASE b.b WHEN 0 THEN e0 WHEN 1 THEN e1 WHEN 2 THEN e2 ELSE e3 END AS en FROM e, (VALUES (0), (1), (2), (3)) b(b)), bits AS (SELECT a.doc_id, a.f * 4 + a.b AS idx, CASE WHEN x.en > a.en THEN 1 ELSE 0 END AS bit FROM eb a JOIN eb x ON x.doc_id = a.doc_id AND x.b = a.b AND x.f = a.f + 1 WHERE a.f < 16), bands AS (SELECT doc_id, idx // 16 AS b, string_agg(bit::VARCHAR, '' ORDER BY idx) AS s FROM bits GROUP BY doc_id, idx // 16), bandc AS (SELECT doc_id, b, s FROM (SELECT *, row_number() OVER (PARTITION BY b, s ORDER BY doc_id) AS _rn FROM bands) WHERE _rn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandc a JOIN bandc b ON a.b = b.b AND a.s = b.s AND a.doc_id < b.doc_id), ham AS (SELECT c.id_a, c.id_b, sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)::BIGINT AS hamming FROM cand c JOIN bits x ON x.doc_id = c.id_a JOIN bits y ON y.doc_id = c.id_b AND y.idx = x.idx GROUP BY c.id_a, c.id_b) SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b""")) { (s, d) =>
       dedupPercept(synthesizePcmWavs(Tables.documents(s, d), "doc_id"),
         hashOf = graft.functions.GraftFunctions.wavFingerprint)
-        .orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b")
+    },
 
     // the registered query takes the codegen path; the mapPartitions
     // typed-decode path is spec-verified equal (SimilaritySpec)
-    "mm_meta" -> ((s, d) =>
+    // oracle: mirrors FakeDecoder: the fake decode is integer arithmetic on the
+    // payload size, so the oracle can recompute it
+    Query("mm_meta", corpusGrain = true, Some(
+      """SELECT doc_id, octet_length(encode(text))::BIGINT AS blob_bytes, md5(text) AS blob_md5, (octet_length(encode(text)) + 255) // 256 AS n_chunks, 64 + octet_length(encode(text)) % 512 AS decoded_w, 64 + (octet_length(encode(text)) * 7) % 512 AS decoded_h, 1 + octet_length(encode(text)) % 8 AS frames FROM documents ORDER BY doc_id""")) { (s, d) =>
       metaExpr(withBlob(Tables.documents(s, d), "doc_id", "text"), chunkBytes = 256)
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
-    "mm_chunks" -> ((s, d) =>
+    // oracle: DuckDB lacks BLOB substring; the corpus is ASCII so char slices of
+    // the VARCHAR are byte-identical to the engine's binary slices
+    Query("mm_chunks", corpusGrain = true, Some(
+      """WITH c AS (SELECT doc_id, unnest(range(0, ((length(text) + 63) // 64)::INT)) AS ci, text FROM documents) SELECT doc_id, ci::BIGINT AS ci, length(substr(text, (ci * 64 + 1)::INT, 64))::BIGINT AS chunk_bytes, md5(substr(text, (ci * 64 + 1)::INT, 64)) AS chunk_md5 FROM c ORDER BY doc_id, ci""")) { (s, d) =>
       chunkTable(withBlob(Tables.documents(s, d), "doc_id", "text"), chunkBytes = 64)
-        .orderBy("doc_id", "ci")),
+        .orderBy("doc_id", "ci")
+    },
 
-    "mm_frames" -> ((s, d) =>
+    Query("mm_frames", corpusGrain = true, Some(
+      """WITH b AS (SELECT doc_id, length(text) AS bytes, 1 + length(text) % 8 AS frames, text FROM documents), f AS (SELECT doc_id, bytes, frames, text, unnest(range(0, frames::INT)) AS fi FROM b) SELECT doc_id, fi::BIGINT AS fi, floor((fi * bytes) / frames)::BIGINT AS frame_off, md5(substr(text, floor((fi * bytes) / frames)::INT + 1, 16)) AS frame_md5 FROM f ORDER BY doc_id, fi""")) { (s, d) =>
       frameSamples(withBlob(Tables.documents(s, d), "doc_id", "text"), frameBytes = 16)
-        .orderBy("doc_id", "fi")),
+        .orderBy("doc_id", "fi")
+    },
 
     // real header decode: blobs synthesized with actual PNG/JPEG container
     // structure (dims encoded at spec offsets, variable-length JPEG
@@ -1253,7 +1324,17 @@ object Mm {
     // byte orders, IFD walk with mixed SHORT/LONG entry types and a
     // skipped tag) and BMP (signed-height i32le arithmetic, top-down
     // flag) — native expression, scan-fused, zero shuffle
-    "mm_decode_tiff_bmp" -> ((s, d) => {
+    // oracle: ground truth of the synthesized TIFF IFDs / BMP headers from
+    // doc_id alone: endianness, both entry value types, and the BMP
+    // signed-height convention all have to round-trip to match
+    Query("mm_decode_tiff_bmp", corpusGrain = true, Some(
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 4 <= 1 THEN 'tiff' WHEN doc_id % 4 = 2 THEN 'bmp' ELSE 'unknown' END AS format,
+        |  CASE doc_id % 4 WHEN 0 THEN 'II' WHEN 1 THEN 'MM' END AS endian,
+        |  CASE WHEN doc_id % 4 <= 2 THEN doc_id % 900 + 100 END AS width,
+        |  CASE WHEN doc_id % 4 <= 2 THEN (doc_id * 3) % 900 + 100 END AS height,
+        |  CASE WHEN doc_id % 4 = 2 THEN CASE WHEN doc_id % 8 = 6 THEN 1 ELSE 0 END END AS top_down
+        |FROM documents ORDER BY doc_id""".stripMargin)) { (s, d) =>
       val e = graft.functions.GraftFunctions.tiffBmpDims(col("blob"))
       synthesizeTiffBmp(Tables.documents(s, d), "doc_id", "text")
         .select(col("doc_id"), e.as("e"))
@@ -1263,7 +1344,7 @@ object Mm {
           col("e.width").as("width"), col("e.height").as("height"),
           col("e.top_down").as("top_down"))
         .orderBy("doc_id")
-    }),
+    },
 
     // charset gate over raw ingest bytes: five byte-level classes
     // (ascii / utf-8 / latin-1 / BOM'd utf-16le / NUL-bearing binary)
@@ -1271,7 +1352,8 @@ object Mm {
     // class deterministically: NULs at BOTH parities rule out the
     // alternating-NUL utf-16 heuristic for ANY following payload, and
     // 0xFF can never open a valid UTF-8 sequence
-    "mm_detect_encoding" -> ((s, d) => {
+    Query("mm_detect_encoding", corpusGrain = true, Some(
+      """SELECT doc_id, CASE doc_id % 5 WHEN 0 THEN 'ascii' WHEN 1 THEN 'utf-8' WHEN 2 THEN 'latin-1' WHEN 3 THEN 'utf-16le' ELSE 'binary' END AS enc FROM documents ORDER BY doc_id""")) { (s, d) =>
       val id = col("doc_id").cast("bigint")
       val v = pmod(id, lit(5))
       val ds = id.cast("string")
@@ -1286,24 +1368,36 @@ object Mm {
         .select(col("doc_id"),
           graft.functions.GraftFunctions.detectEncoding(col("blob")).as("enc"))
         .orderBy("doc_id")
-    }),
+    },
 
-    "mm_decode_meta" -> ((s, d) =>
+    // oracle: ground truth of the synthesized headers: dims derive from doc_id for
+    // the png/jpeg thirds; raw-text blobs carry no container
+    Query("mm_decode_meta", corpusGrain = true, Some(
+      """SELECT doc_id, CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'unknown' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents ORDER BY doc_id""")) { (s, d) =>
       decodeImageMeta(synthesizeMedia(Tables.documents(s, d), "doc_id", "text"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // little-endian RIFF/WAVE chunk walk — audio mirror of mm_decode_meta
-    "mm_decode_wav" -> ((s, d) =>
+    // oracle: ground truth of the synthesized RIFF headers, from doc_id alone
+    Query("mm_decode_wav", corpusGrain = true, Some(
+      """SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 'unknown' ELSE 'wav' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 2 + 1 END AS channels, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 8000 * (doc_id % 5 + 1) END AS sample_rate, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 8 * (doc_id % 3 + 1) END AS bits, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 250 * (doc_id % 10 + 1) END AS duration_ms FROM documents ORDER BY doc_id""")) { (s, d) =>
       decodeWavMeta(synthesizeAudio(Tables.documents(s, d), "doc_id", "text"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // the no-walk member of the decode family: GIF's mandatory-first
     // Logical Screen Descriptor at fixed spec offsets — u16le dims
     // (the third endianness/offset regime after PNG-BE and RIFF-LE),
     // version gate, GCT flag + 2^(N+1) color count
-    "mm_decode_gif" -> ((s, d) =>
+    // oracle: ground truth of the synthesized GIF headers, from doc_id alone:
+    // third 0 = 89a with a 2^(id%8+1)-color GCT, 1 = 87a without,
+    // 2 = raw text
+    Query("mm_decode_gif", corpusGrain = true, Some(
+      """SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 'unknown' ELSE 'gif' END AS format, CASE WHEN doc_id % 3 = 0 THEN '89a' WHEN doc_id % 3 = 1 THEN '87a' END AS version, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height, CASE WHEN doc_id % 3 = 0 THEN (2 << (doc_id % 8))::BIGINT END AS gct_colors FROM documents ORDER BY doc_id""")) { (s, d) =>
       decodeGifMeta(synthesizeGif(Tables.documents(s, d), "doc_id", "text"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // RIFF chunk walk with the odd-chunk pad modeled — the FOURTH image
     // container, one query over all three published bitstream flavors
@@ -1311,30 +1405,53 @@ object Mm {
     // construct valid containers AND parse each flavor's own dim
     // encoding (start-code-gated u16le, signature-gated u32le bitfield,
     // u24le canvas) to match the doc_id-derived ground truth
-    "mm_decode_webp" -> ((s, d) =>
+    // oracle: ground truth of the synthesized WebP containers, from doc_id
+    // alone: quarter 0/1/2 = VP8/VP8L/VP8X with the house dim
+    // formulas, quarter 3 = raw text (no container)
+    Query("mm_decode_webp", corpusGrain = true, Some(
+      """SELECT doc_id, CASE WHEN doc_id % 4 = 3 THEN 'unknown' ELSE 'webp' END AS format, CASE WHEN doc_id % 4 = 0 THEN 'vp8' WHEN doc_id % 4 = 1 THEN 'vp8l' WHEN doc_id % 4 = 2 THEN 'vp8x' END AS codec, CASE WHEN doc_id % 4 = 3 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 4 = 3 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents ORDER BY doc_id""")) { (s, d) =>
       decodeWebpMeta(synthesizeWebp(Tables.documents(s, d), "doc_id", "text"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // big-endian ISO-BMFF two-level box walk — the VIDEO container: mvhd
     // duration/timescale + tkhd dims, blobs synthesized with free-box
     // placement varying by doc_id so fixed offsets cannot pass
-    "mm_decode_mp4" -> ((s, d) =>
+    // oracle: ground truth of the synthesized ISO-BMFF headers, from doc_id
+    // alone: the engine must construct valid nested boxes AND walk both
+    // levels back to match
+    Query("mm_decode_mp4", corpusGrain = true, Some(
+      """SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 'unknown' ELSE 'mp4' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 1000 * (doc_id % 10 + 1) END AS duration_ms, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents ORDER BY doc_id""")) { (s, d) =>
       decodeMp4Meta(synthesizeMp4(Tables.documents(s, d), "doc_id", "text"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // video token budget: 1 fps frame sampling over the decoded
     // duration × 16px patch grid — the packer-facing number for clips
-    "mm_video_tokens" -> ((s, d) =>
+    // oracle: frames at 1 fps = the whole-second duration; patches off the
+    // tkhd dims; unknown containers budget zero
+    Query("mm_video_tokens", corpusGrain = true, Some(
+      """WITH m AS (SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 'unknown' ELSE 'mp4' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 1000 * (doc_id % 10 + 1) END AS duration_ms, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents) SELECT doc_id, format, duration_ms, width, height, coalesce(CAST(ceil(duration_ms / 1000.0) AS BIGINT), 0) AS sampled_frames, coalesce(CAST(ceil(width / 16.0) AS BIGINT) * CAST(ceil(height / 16.0) AS BIGINT), 0) AS tokens_per_frame, coalesce(CAST(ceil(duration_ms / 1000.0) AS BIGINT) * CAST(ceil(width / 16.0) AS BIGINT) * CAST(ceil(height / 16.0) AS BIGINT), 0) AS vision_tokens FROM m ORDER BY doc_id""")) { (s, d) =>
       videoTokens(
         decodeMp4Meta(synthesizeMp4(Tables.documents(s, d), "doc_id", "text")),
         patch = 16, fps = 1.0)
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // TRUE frame extraction through the sample table: stsz sizes + stco
     // absolute offsets, one row per sample, md5 of the mdat bytes the
     // table points at — the oracle states every offset/size/slice from
     // doc_id alone, so only a correct six-level walk can match
-    "mm_frames_mp4" -> ((s, d) =>
+    // oracle: sample-table ground truth from doc_id alone: F = id%4+2 samples,
+    // sz(i) = 16 + (id+i)%17, absolute offsets = the deterministic
+    // header length 360+8F plus the running size sum, with both offset
+    // and size CLAMPED to the payload length exactly as the muxer
+    // declares them (SynthMp4Samples: the table must never point past
+    // mdat); the md5 is over the SAME text slice the stco offset points
+    // at inside mdat. Char-based substr == the engine's byte slice only
+    // because the corpus is ASCII — a documented corpus contract.
+    Query("mm_frames_mp4", corpusGrain = true, Some(
+      """WITH p AS (SELECT doc_id, text, length(text) AS n, doc_id % 4 + 2 AS f FROM documents), s AS (SELECT doc_id, text, n, f, unnest(range(0, f::INT)) AS si FROM p), z AS (SELECT doc_id, text, n, f, si, 16 + (doc_id + si) % 17 AS sz FROM s), o AS (SELECT doc_id, text, n, f, si, sz, coalesce(sum(sz) OVER (PARTITION BY doc_id ORDER BY si ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS rel FROM z) SELECT doc_id, si::BIGINT AS si, (360 + 8 * f + least(rel, n))::BIGINT AS sample_off, (least(rel + sz, n) - least(rel, n))::BIGINT AS sample_size, md5(substr(text, (least(rel, n) + 1)::INT, (least(rel + sz, n) - least(rel, n))::INT)) AS sample_md5 FROM o ORDER BY doc_id, si""")) { (s, d) =>
       // fixture assembly (per-doc multi-sample MP4 synthesis) is a
       // session artifact via IndexCache — the mm_frames_gif contract
       // (r15): a deployment reads MP4 bytes from storage shards, it
@@ -1347,7 +1464,8 @@ object Mm {
           .select(col("doc_id").cast("bigint").as("doc_id"),
             graft.functions.GraftFunctions.synthMp4Samples(
               col("doc_id").cast("bigint"), col("text")).as("blob"))))
-        .orderBy("doc_id", "si")),
+        .orderBy("doc_id", "si")
+    },
 
     // ANIMATED-GIF frame extraction — the GIF counterpart of
     // mm_frames_mp4: a real multi-frame ImageIO sequence write, then
@@ -1361,7 +1479,13 @@ object Mm {
     // a deployment reads GIF bytes from storage, it doesn't encode
     // them first, so the steady-state cost is the decode walk alone
     // (tools/GifProbe publishes the synth-vs-operator split).
-    "mm_frames_gif" -> ((s, d) =>
+    // oracle: per-frame dHash ground truth from (doc_id, frame) alone:
+    // F = id%3+2 frames, frame k carries pat_k = (id + 37k) mod 167;
+    // the 8x8 gradient bits (idx 0 = MSB, engine pack order) are
+    // nibble-packed to the 16-char uppercase hex the engine emits via
+    // lpad(hex(dhash), 16, '0') — bit-exact through the LZW round trip
+    Query("mm_frames_gif", corpusGrain = true, Some(
+      """WITH p AS (SELECT doc_id, doc_id % 3 + 2 AS f FROM documents), fr AS (SELECT doc_id, unnest(range(0, f::INT)) AS fi FROM p), cells AS (SELECT doc_id, fi, cy, cx, ((((doc_id + 37 * fi) % 167) * 31 + cy * 7 + cx * 13) % 97) % 8 AS gv FROM fr, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx)), bits AS (SELECT a.doc_id, a.fi, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.fi = a.fi AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), nib AS (SELECT doc_id, fi, idx // 4 AS ni, sum(bit * (CASE idx % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) AS v FROM bits GROUP BY doc_id, fi, idx // 4) SELECT doc_id, fi::BIGINT AS fi, string_agg(substr('0123456789ABCDEF', (v + 1)::INT, 1), '' ORDER BY ni) AS frame_dhash_hex FROM nib GROUP BY doc_id, fi ORDER BY doc_id, fi""")) { (s, d) =>
       graft.IndexCache.of(s"$d|fixture|animgif")(
         graft.Par.fanOut(Tables.documents(s, d), col("doc_id"))
           .select(col("doc_id").cast("bigint").as("doc_id"),
@@ -1371,7 +1495,8 @@ object Mm {
           graft.functions.GraftFunctions.gifFrameDhashes(col("blob"))))
         .select(col("doc_id"), col("pos").cast("bigint").as("fi"),
           lpad(hex(col("col")), 16, "0").as("frame_dhash_hex"))
-        .orderBy("doc_id", "fi")),
+        .orderBy("doc_id", "fi")
+    },
 
     // INLINE-IMAGE ingest: crawl HTML carries images as base64 data
     // URIs; extract them (regex over the markup, decoys of other MIME
@@ -1387,7 +1512,11 @@ object Mm {
     // mm_frames_gif: a crawl pipeline reads HTML from shards, it
     // doesn't synthesize it, so the steady-state row measures the
     // extract → decode → hash operator alone.
-    "mm_inline_images" -> ((s, d) => {
+    // oracle: replays each inline image's dHash bits from the swept cell
+    // formula (pat = (doc_id + 53·ii) mod 167; the brightness shift
+    // cancels in the gradient), nibble-packed to the engine's hex
+    Query("mm_inline_images", corpusGrain = true, Some(
+      """WITH p AS (SELECT doc_id, doc_id % 3 AS kmax FROM documents), im AS (SELECT doc_id, unnest(range(0, (kmax + 1)::INT))::BIGINT AS ii FROM p), cells AS (SELECT doc_id, ii, cy, cx, ((((doc_id + 53 * ii) % 167) * 31 + cy * 7 + cx * 13) % 97) % 8 AS gv FROM im, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx)), bits AS (SELECT a.doc_id, a.ii, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.ii = a.ii AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), nib AS (SELECT doc_id, ii, idx // 4 AS ni, sum(bit * (CASE idx % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) AS v FROM bits GROUP BY doc_id, ii, idx // 4) SELECT doc_id, ii, string_agg(substr('0123456789ABCDEF', (v + 1)::INT, 1), '' ORDER BY ni) AS dhash_hex FROM nib GROUP BY doc_id, ii ORDER BY doc_id, ii""")) { (s, d) =>
       val html = graft.IndexCache.of(s"$d|fixture|inlinehtml")(
         graft.Par.fanOut(Tables.documents(s, d), col("doc_id"))
           .select(col("doc_id").cast("bigint").as("doc_id"), col("text"))
@@ -1400,14 +1529,17 @@ object Mm {
               |      base64(synth_cell_png(doc_id + 53 * k)), '">')), '<br>'),
               |  '</body></html>')""".stripMargin).as("html")))
       inlineImageHashes(html).orderBy("doc_id", "ii")
-    }),
+    },
 
     // JPEG EXIF decode: APP1 marker scan → TIFF header (BOTH byte
     // orders, alternating by id parity) → IFD0 + Exif sub-IFD walk.
     // Orientation is what a percept pass must normalize by; the oracle
     // states every field from doc_id's formulas, so only a correct
     // endian-aware TIFF walk matches
-    "mm_exif" -> ((s, d) =>
+    // oracle: the EXIF formulas the synthesizer encodes, from doc_id alone —
+    // matching requires the endian-aware TIFF walk to read them back
+    Query("mm_exif", corpusGrain = true, Some(
+      """SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS endian, (1 + doc_id % 8)::BIGINT AS orientation, 'GraftCam ' || (doc_id % 5)::VARCHAR AS make, '2026:01:' || lpad((1 + doc_id % 28)::VARCHAR, 2, '0') || ' ' || lpad((doc_id % 24)::VARCHAR, 2, '0') || ':00:00' AS datetime, 72::BIGINT AS pixel_x FROM documents ORDER BY doc_id""")) { (s, d) =>
       graft.Par.fanOut(Tables.documents(s, d), col("doc_id"))
         .select(col("doc_id").cast("bigint").as("doc_id"),
           graft.functions.GraftFunctions.exifMeta(
@@ -1416,14 +1548,17 @@ object Mm {
         .select(col("doc_id"), col("e.endian").as("endian"),
           col("e.orientation").as("orientation"), col("e.make").as("make"),
           col("e.datetime").as("datetime"), col("e.pixel_x").as("pixel_x"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // 16px ViT patch grid over the decoded dims: the vision-token budget
-    "mm_vision_tokens" -> ((s, d) =>
+    Query("mm_vision_tokens", corpusGrain = true, Some(
+      """WITH m AS (SELECT doc_id, CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'unknown' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents) SELECT doc_id, format, width, height, coalesce(CAST(ceil(width / 16.0) AS BIGINT), 0) AS patches_x, coalesce(CAST(ceil(height / 16.0) AS BIGINT), 0) AS patches_y, coalesce(CAST(ceil(width / 16.0) AS BIGINT) * CAST(ceil(height / 16.0) AS BIGINT), 0) AS vision_tokens FROM m ORDER BY doc_id""")) { (s, d) =>
       visionTokens(
         decodeImageMeta(synthesizeMedia(Tables.documents(s, d), "doc_id", "text")),
         patch = 16)
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // MULTIMODAL context packing: a doc costs text tokens PLUS its
     // image's vision tokens; pack the combined budget with the same
@@ -1431,7 +1566,8 @@ object Mm {
     // synthesizes the payload from the text column, so the two token
     // projections join back on doc_id; a real multimodal table carries
     // text and blob as columns of ONE row — a single scan, no join.)
-    "mm_pack_multimodal" -> ((s, d) => {
+    Query("mm_pack_multimodal", corpusGrain = true, Some(
+      raw"""WITH t AS (SELECT doc_id, len(string_split_regex(trim(text), '\s+'))::BIGINT AS ws_tokens FROM documents), v AS (SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 0 ELSE CAST(ceil((doc_id % 900 + 100) / 16.0) AS BIGINT) * CAST(ceil(((doc_id * 3) % 900 + 100) / 16.0) AS BIGINT) END AS vision_tokens FROM documents), u AS (SELECT doc_id, ws_tokens, vision_tokens, ws_tokens + vision_tokens AS total_tokens, doc_id % 8 AS shard FROM t JOIN v USING (doc_id)), c AS (SELECT *, sum(total_tokens) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - total_tokens AS cum FROM u) SELECT doc_id, shard, ws_tokens, vision_tokens, total_tokens, (cum // 4096)::BIGINT AS pack_id, (cum % 4096)::BIGINT AS pack_offset FROM c ORDER BY doc_id""")) { (s, d) =>
       val docs = Tables.documents(s, d)
       val text = docs.select(col("doc_id"), col("text"))
       val ws = TextOps.tokenCount(text, "text").select(col("doc_id"), col("ws_tokens"))
@@ -1446,166 +1582,6 @@ object Mm {
         .select("doc_id", "shard", "ws_tokens", "vision_tokens",
           "total_tokens", "pack_id", "pack_offset")
         .orderBy("doc_id")
-    })
-  )
-
-  /** dHash-bit replay straight from the 72×64 CELL formula (the
-    * brightness shift cancels in the gradient; v = 16+24q is monotone
-    * in q), then the banded pigeonhole + cap — shared verbatim by the
-    * JPEG query (lossy round trip must reproduce the bits) and the
-    * cross-container query (both containers must reproduce them). */
-  private lazy val cellPerceptOracle: String =
-    s"""WITH cells AS (SELECT doc_id, cy, cx, (((doc_id % 167) * 31 + cy * 7 + cx * 13) % 97) % 8 AS gv FROM documents, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx)), bits AS (SELECT a.doc_id, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), bands AS (SELECT doc_id, idx // 16 AS b, string_agg(bit::VARCHAR, '' ORDER BY idx) AS s FROM bits GROUP BY doc_id, idx // 16), bandc AS (SELECT doc_id, b, s FROM (SELECT *, row_number() OVER (PARTITION BY b, s ORDER BY doc_id) AS _rn FROM bands) WHERE _rn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandc a JOIN bandc b ON a.b = b.b AND a.s = b.s AND a.doc_id < b.doc_id), ham AS (SELECT c.id_a, c.id_b, sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)::BIGINT AS hamming FROM cand c JOIN bits x ON x.doc_id = c.id_a JOIN bits y ON y.doc_id = c.id_b AND y.idx = x.idx GROUP BY c.id_a, c.id_b) SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""
-
-  val oracles: Map[String, String] = Map(
-    "mm_detect_encoding" ->
-      """SELECT doc_id, CASE doc_id % 5 WHEN 0 THEN 'ascii' WHEN 1 THEN 'utf-8' WHEN 2 THEN 'latin-1' WHEN 3 THEN 'utf-16le' ELSE 'binary' END AS enc FROM documents ORDER BY doc_id""",
-    // md5-grain collapse + the FakeDecoder dim-bucket arithmetic
-    "mm_dedup_binary" ->
-      """WITH m AS (SELECT doc_id, octet_length(encode(text))::BIGINT AS blob_bytes, md5(text) AS blob_md5 FROM documents) SELECT blob_md5, min(doc_id) AS keep_id, count(*)::BIGINT AS n_copies, min(blob_bytes) AS blob_bytes, min((64 + blob_bytes % 512) * 1024 + (64 + (blob_bytes * 7) % 512)) AS phash_bucket FROM m GROUP BY blob_md5 ORDER BY blob_md5""",
-    // mirrors FakeDecoder: the fake decode is integer arithmetic on the
-    // payload size, so the oracle can recompute it
-    "mm_meta" ->
-      """SELECT doc_id, octet_length(encode(text))::BIGINT AS blob_bytes, md5(text) AS blob_md5, (octet_length(encode(text)) + 255) // 256 AS n_chunks, 64 + octet_length(encode(text)) % 512 AS decoded_w, 64 + (octet_length(encode(text)) * 7) % 512 AS decoded_h, 1 + octet_length(encode(text)) % 8 AS frames FROM documents ORDER BY doc_id""",
-    // DuckDB lacks BLOB substring; the corpus is ASCII so char slices of
-    // the VARCHAR are byte-identical to the engine's binary slices
-    "mm_chunks" ->
-      """WITH c AS (SELECT doc_id, unnest(range(0, ((length(text) + 63) // 64)::INT)) AS ci, text FROM documents) SELECT doc_id, ci::BIGINT AS ci, length(substr(text, (ci * 64 + 1)::INT, 64))::BIGINT AS chunk_bytes, md5(substr(text, (ci * 64 + 1)::INT, 64)) AS chunk_md5 FROM c ORDER BY doc_id, ci""",
-    "mm_frames" ->
-      """WITH b AS (SELECT doc_id, length(text) AS bytes, 1 + length(text) % 8 AS frames, text FROM documents), f AS (SELECT doc_id, bytes, frames, text, unnest(range(0, frames::INT)) AS fi FROM b) SELECT doc_id, fi::BIGINT AS fi, floor((fi * bytes) / frames)::BIGINT AS frame_off, md5(substr(text, floor((fi * bytes) / frames)::INT + 1, 16)) AS frame_md5 FROM f ORDER BY doc_id, fi""",
-    // ground truth of the synthesized headers: dims derive from doc_id for
-    // the png/jpeg thirds; raw-text blobs carry no container
-    "mm_decode_meta" ->
-      """SELECT doc_id, CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'unknown' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents ORDER BY doc_id""",
-
-    // ground truth of the synthesized TIFF IFDs / BMP headers from
-    // doc_id alone: endianness, both entry value types, and the BMP
-    // signed-height convention all have to round-trip to match
-    "mm_decode_tiff_bmp" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 4 <= 1 THEN 'tiff' WHEN doc_id % 4 = 2 THEN 'bmp' ELSE 'unknown' END AS format,
-        |  CASE doc_id % 4 WHEN 0 THEN 'II' WHEN 1 THEN 'MM' END AS endian,
-        |  CASE WHEN doc_id % 4 <= 2 THEN doc_id % 900 + 100 END AS width,
-        |  CASE WHEN doc_id % 4 <= 2 THEN (doc_id * 3) % 900 + 100 END AS height,
-        |  CASE WHEN doc_id % 4 = 2 THEN CASE WHEN doc_id % 8 = 6 THEN 1 ELSE 0 END END AS top_down
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // ground truth of the synthesized ISO-BMFF headers, from doc_id
-    // alone: the engine must construct valid nested boxes AND walk both
-    // levels back to match
-    "mm_decode_mp4" ->
-      """SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 'unknown' ELSE 'mp4' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 1000 * (doc_id % 10 + 1) END AS duration_ms, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents ORDER BY doc_id""",
-
-    // frames at 1 fps = the whole-second duration; patches off the
-    // tkhd dims; unknown containers budget zero
-    "mm_video_tokens" ->
-      """WITH m AS (SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 'unknown' ELSE 'mp4' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 1000 * (doc_id % 10 + 1) END AS duration_ms, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents) SELECT doc_id, format, duration_ms, width, height, coalesce(CAST(ceil(duration_ms / 1000.0) AS BIGINT), 0) AS sampled_frames, coalesce(CAST(ceil(width / 16.0) AS BIGINT) * CAST(ceil(height / 16.0) AS BIGINT), 0) AS tokens_per_frame, coalesce(CAST(ceil(duration_ms / 1000.0) AS BIGINT) * CAST(ceil(width / 16.0) AS BIGINT) * CAST(ceil(height / 16.0) AS BIGINT), 0) AS vision_tokens FROM m ORDER BY doc_id""",
-
-    // sample-table ground truth from doc_id alone: F = id%4+2 samples,
-    // sz(i) = 16 + (id+i)%17, absolute offsets = the deterministic
-    // header length 360+8F plus the running size sum, with both offset
-    // and size CLAMPED to the payload length exactly as the muxer
-    // declares them (SynthMp4Samples: the table must never point past
-    // mdat); the md5 is over the SAME text slice the stco offset points
-    // at inside mdat. Char-based substr == the engine's byte slice only
-    // because the corpus is ASCII — a documented corpus contract.
-    "mm_frames_mp4" ->
-      """WITH p AS (SELECT doc_id, text, length(text) AS n, doc_id % 4 + 2 AS f FROM documents), s AS (SELECT doc_id, text, n, f, unnest(range(0, f::INT)) AS si FROM p), z AS (SELECT doc_id, text, n, f, si, 16 + (doc_id + si) % 17 AS sz FROM s), o AS (SELECT doc_id, text, n, f, si, sz, coalesce(sum(sz) OVER (PARTITION BY doc_id ORDER BY si ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS rel FROM z) SELECT doc_id, si::BIGINT AS si, (360 + 8 * f + least(rel, n))::BIGINT AS sample_off, (least(rel + sz, n) - least(rel, n))::BIGINT AS sample_size, md5(substr(text, (least(rel, n) + 1)::INT, (least(rel + sz, n) - least(rel, n))::INT)) AS sample_md5 FROM o ORDER BY doc_id, si""",
-
-    // ground truth of the synthesized GIF headers, from doc_id alone:
-    // third 0 = 89a with a 2^(id%8+1)-color GCT, 1 = 87a without,
-    // 2 = raw text
-    "mm_decode_gif" ->
-      """SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 'unknown' ELSE 'gif' END AS format, CASE WHEN doc_id % 3 = 0 THEN '89a' WHEN doc_id % 3 = 1 THEN '87a' END AS version, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height, CASE WHEN doc_id % 3 = 0 THEN (2 << (doc_id % 8))::BIGINT END AS gct_colors FROM documents ORDER BY doc_id""",
-
-    // ground truth of the synthesized WebP containers, from doc_id
-    // alone: quarter 0/1/2 = VP8/VP8L/VP8X with the house dim
-    // formulas, quarter 3 = raw text (no container)
-    "mm_decode_webp" ->
-      """SELECT doc_id, CASE WHEN doc_id % 4 = 3 THEN 'unknown' ELSE 'webp' END AS format, CASE WHEN doc_id % 4 = 0 THEN 'vp8' WHEN doc_id % 4 = 1 THEN 'vp8l' WHEN doc_id % 4 = 2 THEN 'vp8x' END AS codec, CASE WHEN doc_id % 4 = 3 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 4 = 3 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents ORDER BY doc_id""",
-
-    // ground truth of the synthesized RIFF headers, from doc_id alone
-    "mm_decode_wav" ->
-      """SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 'unknown' ELSE 'wav' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 2 + 1 END AS channels, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 8000 * (doc_id % 5 + 1) END AS sample_rate, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 8 * (doc_id % 3 + 1) END AS bits, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE 250 * (doc_id % 10 + 1) END AS duration_ms FROM documents ORDER BY doc_id""",
-    // replays each inline image's dHash bits from the swept cell
-    // formula (pat = (doc_id + 53·ii) mod 167; the brightness shift
-    // cancels in the gradient), nibble-packed to the engine's hex
-    "mm_inline_images" ->
-      """WITH p AS (SELECT doc_id, doc_id % 3 AS kmax FROM documents), im AS (SELECT doc_id, unnest(range(0, (kmax + 1)::INT))::BIGINT AS ii FROM p), cells AS (SELECT doc_id, ii, cy, cx, ((((doc_id + 53 * ii) % 167) * 31 + cy * 7 + cx * 13) % 97) % 8 AS gv FROM im, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx)), bits AS (SELECT a.doc_id, a.ii, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.ii = a.ii AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), nib AS (SELECT doc_id, ii, idx // 4 AS ni, sum(bit * (CASE idx % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) AS v FROM bits GROUP BY doc_id, ii, idx // 4) SELECT doc_id, ii, string_agg(substr('0123456789ABCDEF', (v + 1)::INT, 1), '' ORDER BY ni) AS dhash_hex FROM nib GROUP BY doc_id, ii ORDER BY doc_id, ii""",
-
-    // the EXIF formulas the synthesizer encodes, from doc_id alone —
-    // matching requires the endian-aware TIFF walk to read them back
-    "mm_exif" ->
-      """SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS endian, (1 + doc_id % 8)::BIGINT AS orientation, 'GraftCam ' || (doc_id % 5)::VARCHAR AS make, '2026:01:' || lpad((1 + doc_id % 28)::VARCHAR, 2, '0') || ' ' || lpad((doc_id % 24)::VARCHAR, 2, '0') || ':00:00' AS datetime, 72::BIGINT AS pixel_x FROM documents ORDER BY doc_id""",
-    "mm_vision_tokens" ->
-      """WITH m AS (SELECT doc_id, CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'unknown' END AS format, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE doc_id % 900 + 100 END AS width, CASE WHEN doc_id % 3 = 2 THEN NULL ELSE (doc_id * 3) % 900 + 100 END AS height FROM documents) SELECT doc_id, format, width, height, coalesce(CAST(ceil(width / 16.0) AS BIGINT), 0) AS patches_x, coalesce(CAST(ceil(height / 16.0) AS BIGINT), 0) AS patches_y, coalesce(CAST(ceil(width / 16.0) AS BIGINT) * CAST(ceil(height / 16.0) AS BIGINT), 0) AS vision_tokens FROM m ORDER BY doc_id""",
-    "mm_pack_multimodal" ->
-      raw"""WITH t AS (SELECT doc_id, len(string_split_regex(trim(text), '\s+'))::BIGINT AS ws_tokens FROM documents), v AS (SELECT doc_id, CASE WHEN doc_id % 3 = 2 THEN 0 ELSE CAST(ceil((doc_id % 900 + 100) / 16.0) AS BIGINT) * CAST(ceil(((doc_id * 3) % 900 + 100) / 16.0) AS BIGINT) END AS vision_tokens FROM documents), u AS (SELECT doc_id, ws_tokens, vision_tokens, ws_tokens + vision_tokens AS total_tokens, doc_id % 8 AS shard FROM t JOIN v USING (doc_id)), c AS (SELECT *, sum(total_tokens) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - total_tokens AS cum FROM u) SELECT doc_id, shard, ws_tokens, vision_tokens, total_tokens, (cum // 4096)::BIGINT AS pack_id, (cum % 4096)::BIGINT AS pack_offset FROM c ORDER BY doc_id""",
-
-    // replays the dHash BIT POSITIONS from the fixture pixel formula
-    // (16×12 grayscale, 9×8 floor-boundary box averages, bit = right
-    // cell > left cell) and the 16-bit-block candidate pigeonhole with
-    // the same lowest-id bucket cap — the Spark side must reproduce all
-    // of it THROUGH the real container decode (Inflater + unfilter) to
-    // hash-match. Cell assignment inverts the floor boundaries:
-    // cx = ceil(9(x+1)/16)-1, cy = ceil(8(y+1)/12)-1.
-    // replays the JPEG fixture's dHash bits straight from the CELL
-    // formula (the brightness shift cancels in the gradient; v = 16+24q
-    // is monotone in q so comparing q replays comparing pixels), then
-    // the same banded pigeonhole + cap as mm_dedup_percept. The engine
-    // must reproduce these bits through a real DCT/quantization round
-    // trip to hash-match.
-    "mm_dedup_percept_jpeg" -> cellPerceptOracle,
-
-    // container-blind by construction: the SAME cell formula governs
-    // the PNG, JPEG and GIF thirds, so the identical oracle applies —
-    // the engine must agree with it through all THREE containers at once
-    "mm_dedup_percept_cross" -> cellPerceptOracle,
-
-    // lossless LZW round trip: the identical cell oracle, reached
-    // through the ImageIO GIF write + palette decode
-    "mm_dedup_percept_gif" -> cellPerceptOracle,
-    "mm_dedup_percept_bmp_tiff" -> cellPerceptOracle,
-
-    // per-frame dHash ground truth from (doc_id, frame) alone:
-    // F = id%3+2 frames, frame k carries pat_k = (id + 37k) mod 167;
-    // the 8x8 gradient bits (idx 0 = MSB, engine pack order) are
-    // nibble-packed to the 16-char uppercase hex the engine emits via
-    // lpad(hex(dhash), 16, '0') — bit-exact through the LZW round trip
-    "mm_frames_gif" ->
-      """WITH p AS (SELECT doc_id, doc_id % 3 + 2 AS f FROM documents), fr AS (SELECT doc_id, unnest(range(0, f::INT)) AS fi FROM p), cells AS (SELECT doc_id, fi, cy, cx, ((((doc_id + 37 * fi) % 167) * 31 + cy * 7 + cx * 13) % 97) % 8 AS gv FROM fr, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx)), bits AS (SELECT a.doc_id, a.fi, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.fi = a.fi AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), nib AS (SELECT doc_id, fi, idx // 4 AS ni, sum(bit * (CASE idx % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) AS v FROM bits GROUP BY doc_id, fi, idx // 4) SELECT doc_id, fi::BIGINT AS fi, string_agg(substr('0123456789ABCDEF', (v + 1)::INT, 1), '' ORDER BY ni) AS frame_dhash_hex FROM nib GROUP BY doc_id, fi ORDER BY doc_id, fi""",
-
-    // coverage ground truth from the mixed-corpus branch arithmetic:
-    // fifth 0 = decodable pixel PNG, 1 = decodable JPEG, 2 = the
-    // header-only containers of synthesizeMedia (undecodable), 3 = raw
-    // text, 4 = decodable cell GIF. The engine must DECODE its way to
-    // the same counts.
-    "mm_percept_coverage" ->
-      """WITH g AS (SELECT doc_id, CASE WHEN doc_id % 5 = 0 THEN 'png' WHEN doc_id % 5 = 1 THEN 'jpeg' WHEN doc_id % 5 = 4 THEN 'gif' WHEN doc_id % 5 = 2 AND doc_id % 3 = 0 THEN 'png' WHEN doc_id % 5 = 2 AND doc_id % 3 = 1 THEN 'jpeg' ELSE 'other' END AS container, CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS png_ok, CASE WHEN doc_id % 5 = 1 THEN 1 ELSE 0 END AS jpeg_ok, CASE WHEN doc_id % 5 = 4 THEN 1 ELSE 0 END AS gif_ok FROM documents) SELECT container, count(*)::BIGINT AS n_payloads, sum(png_ok)::BIGINT AS n_png_dhash, sum(jpeg_ok)::BIGINT AS n_jpeg_dhash, sum(gif_ok)::BIGINT AS n_gif_dhash, sum(CASE WHEN png_ok = 1 OR jpeg_ok = 1 OR gif_ok = 1 THEN 1 ELSE 0 END)::BIGINT AS n_percept, (sum(CASE WHEN png_ok = 1 OR jpeg_ok = 1 OR gif_ok = 1 THEN 1 ELSE 0 END) * 10000 // count(*))::BIGINT AS coverage_bp FROM g GROUP BY container ORDER BY container""",
-
-    // replays the audio fingerprint bits from the SAMPLE formula: 17
-    // 32-sample frames, four band energies (|s| and lag-1/2/4 abs
-    // diffs, never crossing a frame edge), bit = band energy rises to
-    // the next frame — then the shared banded pigeonhole + cap. The
-    // engine must parse the RIFF container and re-derive every energy
-    // in exact integer math to hash-match; gain cancels in the
-    // comparisons just as brightness does for the image families.
-    "mm_dedup_percept_audio" ->
-      s"""WITH smp AS (SELECT doc_id, t, t // 32 AS f, ((doc_id // 167) % 3 + 1) * (((((doc_id % 167) * 31 + (t // 32) * 13) % 97) % 9 + 1) * ((t * 37 + (doc_id % 167) * 11) % 7 - 3)) AS s FROM documents, generate_series(0, 543) g(t)), d AS (SELECT doc_id, t, f, s, lag(s, 1) OVER (PARTITION BY doc_id ORDER BY t) AS s1, lag(s, 2) OVER (PARTITION BY doc_id ORDER BY t) AS s2, lag(s, 4) OVER (PARTITION BY doc_id ORDER BY t) AS s4 FROM smp), e AS (SELECT doc_id, f, sum(abs(s))::BIGINT AS e0, sum(CASE WHEN t % 32 >= 1 THEN abs(s - s1) ELSE 0 END)::BIGINT AS e1, sum(CASE WHEN t % 32 >= 2 THEN abs(s - s2) ELSE 0 END)::BIGINT AS e2, sum(CASE WHEN t % 32 >= 4 THEN abs(s - s4) ELSE 0 END)::BIGINT AS e3 FROM d GROUP BY doc_id, f), eb AS (SELECT doc_id, f, b.b, CASE b.b WHEN 0 THEN e0 WHEN 1 THEN e1 WHEN 2 THEN e2 ELSE e3 END AS en FROM e, (VALUES (0), (1), (2), (3)) b(b)), bits AS (SELECT a.doc_id, a.f * 4 + a.b AS idx, CASE WHEN x.en > a.en THEN 1 ELSE 0 END AS bit FROM eb a JOIN eb x ON x.doc_id = a.doc_id AND x.b = a.b AND x.f = a.f + 1 WHERE a.f < 16), bands AS (SELECT doc_id, idx // 16 AS b, string_agg(bit::VARCHAR, '' ORDER BY idx) AS s FROM bits GROUP BY doc_id, idx // 16), bandc AS (SELECT doc_id, b, s FROM (SELECT *, row_number() OVER (PARTITION BY b, s ORDER BY doc_id) AS _rn FROM bands) WHERE _rn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandc a JOIN bandc b ON a.b = b.b AND a.s = b.s AND a.doc_id < b.doc_id), ham AS (SELECT c.id_a, c.id_b, sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)::BIGINT AS hamming FROM cand c JOIN bits x ON x.doc_id = c.id_a JOIN bits y ON y.doc_id = c.id_b AND y.idx = x.idx GROUP BY c.id_a, c.id_b) SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b""",
-
-    // the flagship replayed end to end from the corpus-construction
-    // formulas: byte-equality keys per branch — the EXACT determinants
-    // of each branch's bytes: the pixel formulas read pat only through
-    // pat mod 17 (PNG) / mod 97 (JPEG), so those residues ARE the key
-    // (31 is invertible mod both, making the map bijective); media keys
-    // carry the 256-char truncation and the raw third collides with the
-    // raw quarter byte-for-byte — plus BOTH dHash-bit families (pixel
-    // 16×12 box grid for the PNG quarter, 72×64 cells for the JPEG
-    // quarter) through the shared banded pigeonhole, keep-first drop,
-    // per-branch token budgets, and the shard-local pack prefix sums
-    "mm_pipeline_e2e" ->
-      raw"""WITH base AS (SELECT doc_id, text, CASE WHEN doc_id % 4 = 0 THEN 'a|' || ((doc_id % 167) % 17) || '|' || ((doc_id // 167) % 4) WHEN doc_id % 4 = 1 THEN 'b|' || ((doc_id % 167) % 97) || '|' || ((doc_id // 167) % 4) WHEN doc_id % 4 = 2 AND doc_id % 3 = 0 THEN 'c0|' || (doc_id % 900) || '|' || ((doc_id * 3) % 900) || '|' || substr(text, 1, 256) WHEN doc_id % 4 = 2 AND doc_id % 3 = 1 THEN 'c1|' || (doc_id % 900) || '|' || ((doc_id * 3) % 900) || '|' || (doc_id % 6) || '|' || (doc_id % 4) || '|' || substr(text, 1, 256) WHEN doc_id % 4 = 2 THEN 'd|' || substr(text, 1, 256) ELSE 'd|' || text END AS bkey FROM documents), g AS (SELECT doc_id, text, bkey, count(*) OVER (PARTITION BY bkey) AS n_copies, min(doc_id) OVER (PARTITION BY bkey) AS keeper FROM base), k1 AS (SELECT doc_id, text, n_copies FROM g WHERE doc_id = keeper), pxb AS (SELECT doc_id, y, x, ((((doc_id % 167) * 31 + y * 7 + x * 13) % 17) * 13 + ((doc_id // 167) % 4) * 7)::BIGINT AS v FROM k1, generate_series(0, 11) g1(y), generate_series(0, 15) g2(x) WHERE doc_id % 4 = 0), pxc AS (SELECT doc_id, (8 * y + 19) // 12 - 1 AS cy, (9 * x + 24) // 16 - 1 AS cx, sum(v) // count(*) AS gv FROM pxb GROUP BY 1, 2, 3), jc AS (SELECT doc_id, cy, cx, ((((doc_id % 167) * 31 + cy * 7 + cx * 13) % 97) % 8)::BIGINT AS gv FROM k1, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx) WHERE doc_id % 4 = 1), cells AS (SELECT * FROM pxc UNION ALL SELECT * FROM jc), bits AS (SELECT a.doc_id, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), bands AS (SELECT doc_id, idx // 16 AS b, string_agg(bit::VARCHAR, '' ORDER BY idx) AS s FROM bits GROUP BY doc_id, idx // 16), bandc AS (SELECT doc_id, b, s FROM (SELECT *, row_number() OVER (PARTITION BY b, s ORDER BY doc_id) AS _rn FROM bands) WHERE _rn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandc a JOIN bandc b ON a.b = b.b AND a.s = b.s AND a.doc_id < b.doc_id), ham AS (SELECT c.id_a, c.id_b, sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)::BIGINT AS hamming FROM cand c JOIN bits x ON x.doc_id = c.id_a JOIN bits y ON y.doc_id = c.id_b AND y.idx = x.idx GROUP BY c.id_a, c.id_b), k2 AS (SELECT * FROM k1 WHERE doc_id NOT IN (SELECT id_b FROM ham WHERE hamming <= 3)), tok AS (SELECT doc_id, n_copies, CASE WHEN doc_id % 4 = 0 THEN 'png' WHEN doc_id % 4 = 1 THEN 'jpeg' WHEN doc_id % 4 = 2 AND doc_id % 3 = 0 THEN 'png' WHEN doc_id % 4 = 2 AND doc_id % 3 = 1 THEN 'jpeg' ELSE 'other' END AS container, (CASE WHEN doc_id % 4 = 0 THEN 1 WHEN doc_id % 4 = 1 THEN 20 WHEN doc_id % 4 = 2 AND doc_id % 3 < 2 THEN CAST(ceil((doc_id % 900 + 100) / 16.0) AS BIGINT) * CAST(ceil(((doc_id * 3) % 900 + 100) / 16.0) AS BIGINT) WHEN doc_id % 4 = 2 THEN len(string_split_regex(trim(substr(text, 1, 256)), '\s+')) ELSE len(string_split_regex(trim(text), '\s+')) END)::BIGINT AS total_tokens, doc_id % 8 AS shard FROM k2), pc AS (SELECT *, sum(total_tokens) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - total_tokens AS cum FROM tok) SELECT doc_id, container, n_copies, shard, total_tokens, (cum // 2048)::BIGINT AS pack_id, (cum % 2048)::BIGINT AS pack_offset FROM pc ORDER BY doc_id""",
-
-    "mm_dedup_percept" ->
-      s"""WITH px AS (SELECT doc_id, y, x, ((((doc_id % 167) * 31 + y * 7 + x * 13) % 17) * 13 + ((doc_id // 167) % 4) * 7)::BIGINT AS v FROM documents, generate_series(0, 11) g1(y), generate_series(0, 15) g2(x)), cells AS (SELECT doc_id, (8 * y + 19) // 12 - 1 AS cy, (9 * x + 24) // 16 - 1 AS cx, sum(v) // count(*) AS gv FROM px GROUP BY doc_id, (8 * y + 19) // 12 - 1, (9 * x + 24) // 16 - 1), bits AS (SELECT a.doc_id, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), bands AS (SELECT doc_id, idx // 16 AS b, string_agg(bit::VARCHAR, '' ORDER BY idx) AS s FROM bits GROUP BY doc_id, idx // 16), bandc AS (SELECT doc_id, b, s FROM (SELECT *, row_number() OVER (PARTITION BY b, s ORDER BY doc_id) AS _rn FROM bands) WHERE _rn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bandc a JOIN bandc b ON a.b = b.b AND a.s = b.s AND a.doc_id < b.doc_id), ham AS (SELECT c.id_a, c.id_b, sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)::BIGINT AS hamming FROM cand c JOIN bits x ON x.doc_id = c.id_a JOIN bits y ON y.doc_id = c.id_b AND y.idx = x.idx GROUP BY c.id_a, c.id_b) SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""
+    }
   )
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.GraftFunctions
 
 /** Typed PII detection + redaction — the pre-training scrub pass every
@@ -164,15 +164,24 @@ object Pii {
       .withColumn("n_card", r.getField("cards"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // per-document typed scrub: the scanner vs the formula
-    "pii_scrub" -> ((s, d) =>
+    Query("pii_scrub", corpusGrain = true, Some(
+      s"WITH $piiCte " +
+        "SELECT doc_id, raw, masked, n_email, n_phone, n_ip, n_card " +
+        "FROM pii ORDER BY doc_id")) { (s, d) =>
       scrub(synthesize(Tables.documents(s, d), "doc_id"), "raw")
         .select("doc_id", "raw", "masked", "n_email", "n_phone", "n_ip", "n_card")
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    },
 
     // corpus PII exposure report: one partial-aggregable global agg
-    "pii_report" -> ((s, d) =>
+    Query("pii_report", corpusGrain = false, Some(
+      s"WITH $piiCte " +
+        "SELECT count(*) AS n_docs, " +
+        "sum(CASE WHEN n_email + n_phone + n_ip + n_card > 0 THEN 1 ELSE 0 END)::BIGINT AS docs_with_pii, " +
+        "sum(n_email)::BIGINT AS emails, sum(n_phone)::BIGINT AS phones, " +
+        "sum(n_ip)::BIGINT AS ips, sum(n_card)::BIGINT AS cards FROM pii")) { (s, d) =>
       scrub(synthesize(Tables.documents(s, d), "doc_id"), "raw")
         .agg(
           count(lit(1)).as("n_docs"),
@@ -181,11 +190,16 @@ object Pii {
           sum(col("n_email").cast("long")).as("emails"),
           sum(col("n_phone").cast("long")).as("phones"),
           sum(col("n_ip").cast("long")).as("ips"),
-          sum(col("n_card").cast("long")).as("cards"))),
+          sum(col("n_card").cast("long")).as("cards"))
+    },
 
     // Luhn validation in isolation: valid card vs checksum-broken twin,
     // plain and separator-grouped forms must agree
-    "pii_luhn_check" -> ((s, d) => {
+    Query("pii_luhn_check", corpusGrain = true, Some(
+      s"WITH $piiCte " +
+        "SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN card ELSE bogus END AS candidate, " +
+        "doc_id % 2 = 0 AS valid, doc_id % 2 = 0 AS valid_fmt " +
+        "FROM pii ORDER BY doc_id")) { (s, d) =>
       val base = synthesize(Tables.documents(s, d), "doc_id")
       base.select(
         col("doc_id"),
@@ -198,24 +212,6 @@ object Pii {
           when(pmod(col("doc_id"), lit(2)) === 0, col("card_fmt"))
             .otherwise(col("bogus16"))).as("valid_fmt"))
         .orderBy("doc_id")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "pii_scrub" ->
-      (s"WITH $piiCte " +
-        "SELECT doc_id, raw, masked, n_email, n_phone, n_ip, n_card " +
-        "FROM pii ORDER BY doc_id"),
-    "pii_report" ->
-      (s"WITH $piiCte " +
-        "SELECT count(*) AS n_docs, " +
-        "sum(CASE WHEN n_email + n_phone + n_ip + n_card > 0 THEN 1 ELSE 0 END)::BIGINT AS docs_with_pii, " +
-        "sum(n_email)::BIGINT AS emails, sum(n_phone)::BIGINT AS phones, " +
-        "sum(n_ip)::BIGINT AS ips, sum(n_card)::BIGINT AS cards FROM pii"),
-    "pii_luhn_check" ->
-      (s"WITH $piiCte " +
-        "SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN card ELSE bogus END AS candidate, " +
-        "doc_id % 2 = 0 AS valid, doc_id % 2 = 0 AS valid_fmt " +
-        "FROM pii ORDER BY doc_id")
+    }
   )
 }

@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.CacheScope
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 
 /** The flagship composed pipeline: the WHOLE training-data stack in one
   * declarative plan — the thing this engine exists to run at 100 TB.
@@ -73,33 +73,8 @@ object Pipelines {
         "pack_id", "pack_offset")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "training_data_e2e" -> ((s, d) =>
-      trainingData(Tables.documents(s, d).select("doc_id", "text", "source"))
-        .orderBy("doc_id")),
-
-    // the flagship WITH the decontamination stage a production run needs:
-    // after dedup, drop the eval docs themselves (doc_id < 20) and every
-    // kept doc sharing a 5-gram shingle with them — executed as the
-    // two-phase bloom-screen → exact-verify anti-join (the corpus never
-    // shuffles for the screen; only bloom-flagged candidates reach the
-    // verify join), while the oracle states plain shared-shingle
-    // semantics (the screen is exact by construction)
-    "training_data_decon_e2e" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text", "source")
-      val bench = docs.filter(col("doc_id") < 20).select("doc_id", "text")
-      trainingData(docs, preMix = { kept =>
-        val train = kept.filter(col("doc_id") >= 20)
-        train.join(
-          Dedup.contaminatedIds(train.select("doc_id", "text"), bench,
-            "doc_id", "text", n = 5, numBits = 1 << 16, numHashes = 4),
-          Seq("doc_id"), "left_anti")
-      }).orderBy("doc_id")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "training_data_e2e" -> {
+  val queries: Seq[Query] = Seq(
+    Query("training_data_e2e", corpusGrain = true, Some {
       val draw = Dedup.sqlDraw("doc_id")
       s"""WITH RECURSIVE ${TextOps.sqlQualityBandCtes("documents", 0.05, 0.95)}, """ +
         s"""bd AS (SELECT d.doc_id, d.text, d.source FROM documents d JOIN band USING (doc_id)), """ +
@@ -108,12 +83,22 @@ object Pipelines {
         s"""spl AS (SELECT doc_id, source, CASE WHEN $draw < 0.8 * 65536 THEN 'train' WHEN $draw < 0.9 * 65536 THEN 'val' ELSE 'test' END AS split, len(string_split_regex(trim(text), '\\s+'))::BIGINT AS ws_tokens, doc_id % 8 AS shard FROM mixed), """ +
         s"""cum AS (SELECT *, sum(ws_tokens) OVER (PARTITION BY split, shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ws_tokens AS c FROM spl) """ +
         s"""SELECT doc_id, source, split, shard::BIGINT AS shard, ws_tokens, (c // 2048)::BIGINT AS pack_id, (c % 2048)::BIGINT AS pack_offset FROM cum ORDER BY doc_id"""
+    }) { (s, d) =>
+      trainingData(Tables.documents(s, d).select("doc_id", "text", "source"))
+        .orderBy("doc_id")
     },
 
-    // the decon stage states PLAIN shared-shingle semantics (drop eval
+    // the flagship WITH the decontamination stage a production run needs:
+    // after dedup, drop the eval docs themselves (doc_id < 20) and every
+    // kept doc sharing a 5-gram shingle with them — executed as the
+    // two-phase bloom-screen → exact-verify anti-join (the corpus never
+    // shuffles for the screen; only bloom-flagged candidates reach the
+    // verify join), while the oracle states plain shared-shingle
+    // semantics (the screen is exact by construction)
+    // oracle: the decon stage states PLAIN shared-shingle semantics (drop eval
     // docs + any kept doc sharing a 5-gram with them) — the Spark side's
     // bloom screen + exact verify must land on exactly this set
-    "training_data_decon_e2e" -> {
+    Query("training_data_decon_e2e", corpusGrain = true, Some {
       val draw = Dedup.sqlDraw("doc_id")
       s"""WITH RECURSIVE ${TextOps.sqlQualityBandCtes("documents", 0.05, 0.95)}, """ +
         s"""bd AS (SELECT d.doc_id, d.text, d.source FROM documents d JOIN band USING (doc_id)), """ +
@@ -128,6 +113,16 @@ object Pipelines {
         s"""spl AS (SELECT doc_id, source, CASE WHEN $draw < 0.8 * 65536 THEN 'train' WHEN $draw < 0.9 * 65536 THEN 'val' ELSE 'test' END AS split, len(string_split_regex(trim(text), '\\s+'))::BIGINT AS ws_tokens, doc_id % 8 AS shard FROM mixed), """ +
         s"""cum AS (SELECT *, sum(ws_tokens) OVER (PARTITION BY split, shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ws_tokens AS c FROM spl) """ +
         s"""SELECT doc_id, source, split, shard::BIGINT AS shard, ws_tokens, (c // 2048)::BIGINT AS pack_id, (c % 2048)::BIGINT AS pack_offset FROM cum ORDER BY doc_id"""
+    }) { (s, d) =>
+      val docs = Tables.documents(s, d).select("doc_id", "text", "source")
+      val bench = docs.filter(col("doc_id") < 20).select("doc_id", "text")
+      trainingData(docs, preMix = { kept =>
+        val train = kept.filter(col("doc_id") >= 20)
+        train.join(
+          Dedup.contaminatedIds(train.select("doc_id", "text"), bench,
+            "doc_id", "text", n = 5, numBits = 1 << 16, numHashes = 4),
+          Seq("doc_id"), "left_anti")
+      }).orderBy("doc_id")
     }
   )
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Similarity search over an embedding column (`Array[Float]`):
   * brute-force cosine top-k as the exactness baseline, hyperplane-LSH
@@ -1563,382 +1563,6 @@ object Similarity {
     }
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_profile" -> ((s, d) =>
-      embProfile(Tables.embeddings(s, d), "label", "embedding")
-        .orderBy("label")),
-
-    "sim_topk" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      simTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
-          prebuiltNrm = Some(nrmOf(s, d)))
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // ANN quality audit: IVF recall@5 vs the brute-force truth — the
-    // similarity-family sibling of dedup_lsh_eval. Both sides reuse the
-    // SAME helpers/caches as the queries they audit, and the oracle
-    // composes the two committed replay chains, so the audit cannot
-    // drift from the audited configs.
-    "sim_recall_eval" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val truth = simTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, prebuiltNrm = Some(nrmOf(s, d)))
-        .select("query_id", "neighbor_id")
-      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-          "vec_id", c = ivfC, iters = ivfIters))
-      val nrmI = normalized(e, "vec_id", "embedding")
-      val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
-        ivfListsTable(nrmI, "vec_id", cents, euclid = true))
-      val ann = simIvfAnn(e, "vec_id", "embedding", cents,
-        queryPred = col("vec_id") < 10, nProbe = 2, k = 5, euclid = true,
-        prebuiltLists = Some(lists))
-        .select("query_id", "neighbor_id")
-      val perQ = truth.join(ann.withColumn("h", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("t"), sum(coalesce(col("h"), lit(0L))).as("h"))
-      perQ.agg(
-        count(lit(1)).as("n_queries"),
-        sum(col("t")).as("n_truth"),
-        sum(col("h")).as("n_hit"),
-        Stable.ratioRounded(sum(col("h")), sum(col("t")), 4).as("recall"),
-        min(Stable.ratioRounded(col("h"), col("t"), 4)).as("min_recall"))
-    }),
-
-    // the HNSW-class index family: NN-Descent k-NN graph construction
-    // (capped-LSH init, 2 neighbor-of-neighbor rounds) — the navigable
-    // graph a beam search routes over
-    "sim_knn_graph" -> ((s, d) =>
-      graphOf(s, d)
-        .select(col("src").as("vec_id"), col("dst").as("neighbor_id"),
-          col("cos_sim"), col("rank"))
-        .orderBy("vec_id", "rank")),
-
-    // NSW beam search over the session-cached graph: LSH-seeded
-    // multi-entry beam, 3 expand/score/prune hops, top-5 emitted
-    "sim_graph_search" -> ((s, d) =>
-      graphSearch(Tables.embeddings(s, d).select("vec_id", "embedding"),
-        "vec_id", "embedding", graphOf(s, d), col("vec_id") < 10,
-        beam = graphBeam, hops = graphHops, k = graphTopK,
-        tabs = annTabs, bucketCap = graphInitCap,
-        prebuiltNrm = Some(nrmOf(s, d)), prebuiltBkt = Some(bktOf(s, d)))
-        .orderBy("query_id", "rank")),
-
-    // incremental maintenance: a 10% batch splices into the frozen base
-    // graph with batch-sized work (beam-search forward edges + reverse
-    // re-ranks) — the online-insert half of the family; the oracle
-    // replays base build + batch beams + splice definitionally
-    "sim_graph_append" -> ((s, d) =>
-      graphAppend(Tables.embeddings(s, d).select("vec_id", "embedding"),
-        "vec_id", "embedding", graphBaseOf(s, d),
-        batchPred = col("vec_id") % 10 === graphBatchMod, k = graphK,
-        beam = graphBeam, hops = graphHops, tabs = annTabs,
-        bucketCap = graphInitCap, prebuiltNrm = Some(nrmOf(s, d)),
-        prebuiltBkt = Some(bktOf(s, d)))
-        .select(col("src").as("vec_id"), col("dst").as("neighbor_id"),
-          col("cos_sim"), col("rank"))
-        .orderBy("vec_id", "rank")),
-
-    // the family's recall audit vs brute-force truth — same composed-
-    // chain contract as sim_recall_eval: both sides run the committed
-    // graph build + search, so the audit cannot drift from the config
-    "sim_graph_recall_eval" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val truth = simTopK(e, e.filter(col("vec_id") < 10), "vec_id",
-        "embedding", k = graphTopK, prebuiltNrm = Some(nrmOf(s, d)))
-        .select("query_id", "neighbor_id")
-      val got = graphSearch(e, "vec_id", "embedding", graphOf(s, d),
-        col("vec_id") < 10, beam = graphBeam, hops = graphHops,
-        k = graphTopK, tabs = annTabs, bucketCap = graphInitCap,
-        prebuiltNrm = Some(nrmOf(s, d)), prebuiltBkt = Some(bktOf(s, d)))
-        .select("query_id", "neighbor_id")
-      val perQ = truth.join(got.withColumn("h", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("t"), sum(coalesce(col("h"), lit(0L))).as("h"))
-      perQ.agg(
-        count(lit(1)).as("n_queries"),
-        sum(col("t")).as("n_truth"),
-        sum(col("h")).as("n_hit"),
-        Stable.ratioRounded(sum(col("h")), sum(col("t")), 4).as("recall"),
-        min(Stable.ratioRounded(col("h"), col("t"), 4)).as("min_recall"))
-    }),
-
-    "sim_lsh_ann" -> ((s, d) =>
-      simLshAnn(Tables.embeddings(s, d).select("vec_id", "embedding"),
-        "vec_id", "embedding", col("vec_id") < 10, annTabs, k = 5,
-        multiProbe = true)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")),
-
-    "sim_ivf_ann" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      // centroid training is INDEX CONSTRUCTION — run once per corpus and
-      // reused by every query (the GroupIndex pattern), not re-trained per
-      // invocation; deterministic, so caching cannot change results
-      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-          "vec_id", c = ivfC, iters = ivfIters))
-      val nrmI = normalized(e, "vec_id", "embedding")
-      val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
-        ivfListsTable(nrmI, "vec_id", cents, euclid = true))
-      simIvfAnn(e, "vec_id", "embedding", cents,
-        queryPred = col("vec_id") < 10, nProbe = 2, k = 5, euclid = true,
-        prebuiltLists = Some(lists))
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // metadata-FILTERED ANN: top-5 among label=2 vectors only, the
-    // predicate pushed to the posting-lists scan (label denormalized
-    // into the index), nProbe raised 2->4 to recover filtered recall
-    "sim_filtered_ann" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-          "vec_id", c = ivfC, iters = ivfIters))
-      val nrmI = normalized(e, "vec_id", "embedding")
-      val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
-        ivfListsTable(nrmI, "vec_id", cents, euclid = true))
-      val meta = Tables.embeddings(s, d)
-        .select(col("vec_id").as("neighbor_id"), col("label"))
-      val listsMeta = cachedIndex(s"$d|ivf_lists_meta|$ivfC|$ivfIters")(
-        lists.join(meta, "neighbor_id"))
-      simIvfAnn(e, "vec_id", "embedding", cents,
-        queryPred = col("vec_id") < 10, nProbe = 4, k = 5, euclid = true,
-        prebuiltLists = Some(listsMeta),
-        neighborPred = Some(col("label") === 2))
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // k-means topic bucketing: every vector's cluster + cluster sizes —
-    // the "balance the corpus by embedding cluster" curation view. The
-    // assignment IS the session-lifetime IVF lists index (built once,
-    // zero-shuffle literal-centroid projection); sizes are one tiny agg
-    // broadcast back, so the corpus-sized side never shuffles.
-    "cluster_kmeans" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-          "vec_id", c = ivfC, iters = ivfIters))
-      val nrmI = normalized(e, "vec_id", "embedding")
-      val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
-        ivfListsTable(nrmI, "vec_id", cents, euclid = true))
-      val assign = lists.select(col("neighbor_id").as("vec_id"), col("cid"))
-      val sizes = assign.groupBy("cid").agg(count(lit(1)).as("cluster_n"))
-      assign.join(broadcast(sizes), "cid")
-        .select("vec_id", "cid", "cluster_n")
-        .orderBy("vec_id")
-    }),
-
-    "dedup_embedding" -> ((s, d) =>
-      embeddingPairs(Tables.embeddings(s, d).select("vec_id", "embedding"),
-        "vec_id", "embedding", dupTabs, threshold = 0.4)
-        .select("id_a", "id_b", "cos_sim")
-        .orderBy("id_a", "id_b")),
-
-    // centroid-distance outlier screen over the shared k-means centroids
-    "emb_outliers" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-          "vec_id", c = ivfC, iters = ivfIters))
-      embOutliers(e, "vec_id", "embedding", cents, tau = outlierTau)
-        .orderBy("vec_id")
-    }),
-
-    // data-dependent answer size: everything with cos >= 0.25 per query
-    "sim_range_search" -> ((s, d) =>
-      simRangeSearch(Tables.embeddings(s, d).select("vec_id", "embedding"),
-        "vec_id", "embedding", col("vec_id") < 10, annTabs, tau = 0.25)
-        .select("query_id", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "neighbor_id")),
-
-    // SemDeDup-shaped semantic dedup: near-dup embedding pairs ->
-    // components -> keep each cluster's min member with its cluster size.
-    // The component labelling is a session-lifetime INDEX artifact like
-    // the IVF/PQ tables (deterministic — caching cannot change results).
-    "dedup_semantic_e2e" -> ((s, d) => {
-      val comps = cachedIndex(s"$d|semcomp|0.4") {
-        val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        val pairs = embeddingPairs(e, "vec_id", "embedding", dupTabs,
-          threshold = 0.4).select("id_a", "id_b")
-        Dedup.connectedComponents(e.select("vec_id"), "vec_id",
-          pairs, "id_a", "id_b")
-      }
-      val sizes = comps.groupBy("cluster").agg(count(lit(1)).as("cluster_n"))
-      comps.filter(col("vec_id") === col("cluster")).select("vec_id")
-        .join(sizes.select(col("cluster").as("vec_id"), col("cluster_n")), "vec_id")
-        .orderBy("vec_id")
-    }),
-
-    // every point's top-3 bucket-mate neighbors (directed self-join)
-    "sim_knn_join" -> ((s, d) =>
-      simKnnJoin(Tables.embeddings(s, d).select("vec_id", "embedding"),
-        "vec_id", "embedding", dupTabs, k = 3)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")),
-
-    // the copy-heavy scale path: the testdata vectors are all distinct, so
-    // the registered corpus UNIONs an id-shifted exact copy of every vector
-    // — the collapse and fan-back stages then do real work at oracle scale
-    // (each rep fans back to two query ids), not just pass-through
-    "sim_knn_join_rep" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val corpus = e.union(
-        e.select((col("vec_id") + 10000).as("vec_id"), col("embedding")))
-      simKnnJoinRep(corpus, "vec_id", "embedding", dupTabs, k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    // the ROUTED kNN join on the copy-heavy corpus: the distinct-ratio
-    // probe (one HLL agg) must fire and route to rep grain — the oracle
-    // IS the rep-grain answer, so a mis-route hash-fails; SimilaritySpec
-    // pins the opposite decision on the all-distinct corpus
-    "sim_knn_join_auto" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val corpus = e.union(
-        e.select((col("vec_id") + 10000).as("vec_id"), col("embedding")))
-      simKnnJoinAuto(corpus, "vec_id", "embedding", dupTabs, k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    "sim_sq8_ann" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val nrm = normalized(e, "vec_id", "embedding")
-      // training is index construction: once per corpus (2×dims doubles)
-      val (mn, sc) = sq8Cache.computeIfAbsent(d, _ => sq8Train(nrm))
-      val codes = cachedIndex(s"$d|sq8_codes")(
-        sq8CodesTable(nrm, "vec_id", mn, sc))
-      simSq8Ann(e, "vec_id", "embedding", col("vec_id") < 10, mn, sc,
-        shortlist = pqShort, k = 5, prebuiltCodes = Some(codes))
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // the quantizer's acceptance gate: re-encode + decode through the
-    // trained map and report per-vector error vs the exact embedding
-    "emb_quantize_error" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val nrm = normalized(e, "vec_id", "embedding")
-      val (mn, sc) = sq8Cache.computeIfAbsent(d, _ => sq8Train(nrm))
-      sq8QuantizeError(nrm, "vec_id", mn, sc)
-        .orderBy("vec_id")
-    }),
-
-    "sim_pq_ann" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      // codebook training is index construction: once per corpus, cached
-      // like the IVF centroids (deterministic — caching can't change results)
-      val cbs = pqCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
-        _ => pqCodebooks(normalized(e, "vec_id", "embedding"), "vec_id",
-          pqM, pqSubDims, pqKs, pqIters))
-      val codes = cachedIndex(s"$d|pq_codes|$pqM|$pqKs|$pqIters")(
-        pqCodesTable(normalized(e, "vec_id", "embedding"), "vec_id", cbs, pqSubDims))
-      simPqAnn(e, "vec_id", "embedding", cbs, queryPred = col("vec_id") < 10,
-        subDims = pqSubDims, shortlist = pqShort, k = 5,
-        prebuiltCodes = Some(codes))
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    "sim_ivfpq_ann" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val nrm = normalized(e, "vec_id", "embedding")
-      val coarse = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-        _ => kmeansCentroids(nrm, "vec_id", c = ivfC, iters = ivfIters))
-      val cbs = pqCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
-        _ => pqCodebooks(nrm, "vec_id", pqM, pqSubDims, pqKs, pqIters))
-      val lists = cachedIndex(s"$d|ivfpq_codes|$ivfC|$pqM|$pqKs|$pqIters")(
-        ivfPqCodesTable(nrm, "vec_id", coarse, cbs, pqSubDims))
-      simIvfPqAnn(e, "vec_id", "embedding", coarse, cbs,
-        queryPred = col("vec_id") < 10, nProbe = 2,
-        subDims = pqSubDims, shortlist = pqShort, k = 5,
-        prebuiltLists = Some(lists))
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // The index-persistence lifecycle: the IVF-PQ list/code table is
-    // BUILT once, written as parquet (the durable index artifact a real
-    // deployment ships between jobs), READ BACK like any table, and
-    // queried — results identical to the in-session index, checked by the
-    // SAME oracle as sim_ivfpq_ann. The read-back scan prunes to the
-    // narrow code columns like any parquet source.
-    "sim_ivfpq_persisted" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val nrm = normalized(e, "vec_id", "embedding")
-      val coarse = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-        _ => kmeansCentroids(nrm, "vec_id", c = ivfC, iters = ivfIters))
-      val cbs = pqCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
-        _ => pqCodebooks(nrm, "vec_id", pqM, pqSubDims, pqKs, pqIters))
-      // kmeansSampleCut in the key: the coarse centroids are a function
-      // of the training-sample draw, so a sampling change re-keys the
-      // artifact instead of serving codes quantized under stale centroids
-      val path = ivfPqArtifactPath(e, d)
-      val lists = graft.sources.Io.atomicParquetArtifact(s, path)(
-        ivfPqCodesTable(nrm, "vec_id", coarse, cbs, pqSubDims))
-      simIvfPqAnn(e, "vec_id", "embedding", coarse, cbs,
-        queryPred = col("vec_id") < 10, nProbe = 2,
-        subDims = pqSubDims, shortlist = pqShort, k = 5,
-        prebuiltLists = Some(lists))
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // INCREMENTAL index maintenance — the `dedup_incremental` pattern
-    // for the sim family: the base index is built WITHOUT the new batch
-    // (and cached like any session index artifact); the batch is then
-    // encoded against the FROZEN coarse/PQ quantizers — a pure batch-
-    // sized projection, no corpus rescan, no retraining — and its rows
-    // appended. Because encoding is deterministic under frozen
-    // quantizers, the appended index answers queries identically to a
-    // from-scratch encode of the unioned corpus — which is exactly what
-    // the oracle replays. Batch ids sit above ivfC so the base keeps
-    // every k-means/PQ seed row.
-    "sim_ivfpq_append" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val isBatch = col("vec_id") >= ivfC && col("vec_id") % 10 === 7
-      val nrmBase = normalized(e.filter(!isBatch), "vec_id", "embedding")
-      val coarse = kmeansCache.computeIfAbsent(s"$d|app|$ivfC|$ivfIters",
-        _ => kmeansCentroids(nrmBase, "vec_id", c = ivfC, iters = ivfIters))
-      val cbs = pqCache.computeIfAbsent(s"$d|app|$pqM|$pqKs|$pqIters",
-        _ => pqCodebooks(nrmBase, "vec_id", pqM, pqSubDims, pqKs, pqIters))
-      val baseLists = cachedIndex(s"$d|ivfpq_app_base|$ivfC|$pqM|$pqKs|$pqIters")(
-        ivfPqCodesTable(nrmBase, "vec_id", coarse, cbs, pqSubDims))
-      val batchCodes = ivfPqCodesTable(
-        normalized(e.filter(isBatch), "vec_id", "embedding"),
-        "vec_id", coarse, cbs, pqSubDims)
-      simIvfPqAnn(e, "vec_id", "embedding", coarse, cbs,
-        queryPred = col("vec_id") < 10, nProbe = 2,
-        subDims = pqSubDims, shortlist = pqShort, k = 5,
-        prebuiltLists = Some(baseLists.union(batchCodes)))
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    "sim_ivfpq_res_ann" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val nrm = normalized(e, "vec_id", "embedding")
-      val coarse = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-        _ => kmeansCentroids(nrm, "vec_id", c = ivfC, iters = ivfIters))
-      val rcbs = pqResCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
-        _ => pqResCodebooks(nrm, "vec_id", coarse, pqM, pqSubDims, pqKs, pqIters))
-      val lists = cachedIndex(s"$d|ivfpqres_codes|$ivfC|$pqM|$pqKs|$pqIters")(
-        resCodesTable(nrm, "vec_id", coarse, rcbs, pqSubDims))
-      simIvfPqResAnn(e, "vec_id", "embedding", coarse, rcbs,
-        queryPred = col("vec_id") < 10, nProbe = 2,
-        subDims = pqSubDims, shortlist = pqShort, k = 5,
-        prebuiltLists = Some(lists))
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    })
-  )
-
   // ---- oracle SQL generation (same plane literals, same fold order)
 
   private def sqlDot(a: String, b: String): String =
@@ -2180,99 +1804,452 @@ object Similarity {
   private def beamHopSql(i: Int, gFinal: String, width: Int): String =
     s"""e$i AS MATERIALIZED (SELECT s.query_id AS query_id, g.dst AS node FROM b${i - 1} s JOIN $gFinal g ON s.node = g.src UNION SELECT query_id, node FROM b${i - 1}), ${beamPruneSql(s"e$i", s"b$i", width)}"""
 
-  private val oraclesBase: Map[String, String] = Map(
-    "sim_knn_graph" ->
-      s"""WITH $graphCtes SELECT src AS vec_id, dst AS neighbor_id, cos_sim, rank FROM g$graphRounds ORDER BY vec_id, rank""",
+  /** Oracle replay chains the recall audits compose with. */
+  private val topkSql =
+    s"""WITH $normCte, q AS (SELECT vec_id AS query_id, ne AS qe FROM nrm WHERE vec_id < 10), c AS (SELECT vec_id AS neighbor_id, ne AS ce FROM nrm), p AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("qe", "ce")}, 4) AS cos_sim FROM q CROSS JOIN c WHERE query_id != neighbor_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM p) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank"""
+  private val ivfAnnSql =
+    s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT vec_id AS neighbor_id, cid FROM fr WHERE crank = 1), probes AS (SELECT vec_id AS query_id, cid FROM fr WHERE vec_id < 10 AND crank <= 2), cand AS (SELECT DISTINCT p.query_id, l.neighbor_id FROM probes p JOIN lists l USING (cid) WHERE p.query_id != l.neighbor_id), scored2 AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON query_id = x.vec_id JOIN nrm y ON neighbor_id = y.vec_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM scored2) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank"""
+  private val graphSearchSql =
+    s"""WITH $graphCtes, ${beamCtes("vec_id < 10", "TRUE")} SELECT query_id, neighbor_id, cos_sim, rank FROM fin WHERE rank <= $graphTopK ORDER BY query_id, rank"""
 
-    "sim_graph_search" ->
-      s"""WITH $graphCtes, ${beamCtes("vec_id < 10", "TRUE")} SELECT query_id, neighbor_id, cos_sim, rank FROM fin WHERE rank <= $graphTopK ORDER BY query_id, rank""",
+  /** A recall audit's oracle COMPOSES two committed replay chains
+    * (brute-force truth, ANN result) as nested-WITH CTEs and joins them
+    * — one source of each chain's SQL, so the audit can never drift
+    * from the queries it audits. */
+  private def recallSql(tru: String, got: String, gotName: String): String =
+    s"""WITH tru AS ($tru), $gotName AS ($got), pq AS (SELECT t.query_id, count(*) AS t, sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS h FROM tru t LEFT JOIN $gotName a ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id GROUP BY t.query_id) SELECT count(*) AS n_queries, sum(t)::BIGINT AS n_truth, sum(h)::BIGINT AS n_hit, ${Stable.sqlRatioRounded("sum(h)", "sum(t)", 4)} AS recall, min(${Stable.sqlRatioRounded("h", "t", 4)}) AS min_recall FROM pq"""
 
-    // base graph over vec_id % 10 != 7, batch beams seeded from the
+  val queries: Seq[Query] = Seq(
+    Query("emb_profile", corpusGrain = false, Some(
+      s"""SELECT label::BIGINT AS label, count(*) AS n_vecs, min(len(embedding))::BIGINT AS min_dims, max(len(embedding))::BIGINT AS max_dims, min(n2) AS min_norm2, max(n2) AS max_norm2, sum(CASE WHEN bad THEN 1 ELSE 0 END)::BIGINT AS n_nan_vecs FROM (SELECT label, embedding, CASE WHEN isnan(n2r) THEN NULL ELSE n2r END AS n2, bad FROM (SELECT label, embedding, ${sqlDot("embedding", "embedding")} AS n2r, len(list_filter(embedding, x -> isnan(x))) > 0 AS bad FROM embeddings)) GROUP BY label ORDER BY label""")) { (s, d) =>
+      embProfile(Tables.embeddings(s, d), "label", "embedding")
+        .orderBy("label")
+    },
+
+    Query("sim_topk", corpusGrain = false, Some(topkSql)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      simTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
+          prebuiltNrm = Some(nrmOf(s, d)))
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    },
+
+    // ANN quality audit: IVF recall@5 vs the brute-force truth — the
+    // similarity-family sibling of dedup_lsh_eval. Both sides reuse the
+    // SAME helpers/caches as the queries they audit, and the oracle
+    // composes the two committed replay chains, so the audit cannot
+    // drift from the audited configs.
+    Query("sim_recall_eval", corpusGrain = false,
+      Some(recallSql(topkSql, ivfAnnSql, "annr"))) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val truth = simTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
+        k = 5, prebuiltNrm = Some(nrmOf(s, d)))
+        .select("query_id", "neighbor_id")
+      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
+        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
+          "vec_id", c = ivfC, iters = ivfIters))
+      val nrmI = normalized(e, "vec_id", "embedding")
+      val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
+        ivfListsTable(nrmI, "vec_id", cents, euclid = true))
+      val ann = simIvfAnn(e, "vec_id", "embedding", cents,
+        queryPred = col("vec_id") < 10, nProbe = 2, k = 5, euclid = true,
+        prebuiltLists = Some(lists))
+        .select("query_id", "neighbor_id")
+      val perQ = truth.join(ann.withColumn("h", lit(1)),
+          Seq("query_id", "neighbor_id"), "left")
+        .groupBy("query_id")
+        .agg(count(lit(1)).as("t"), sum(coalesce(col("h"), lit(0L))).as("h"))
+      perQ.agg(
+        count(lit(1)).as("n_queries"),
+        sum(col("t")).as("n_truth"),
+        sum(col("h")).as("n_hit"),
+        Stable.ratioRounded(sum(col("h")), sum(col("t")), 4).as("recall"),
+        min(Stable.ratioRounded(col("h"), col("t"), 4)).as("min_recall"))
+    },
+
+    // the HNSW-class index family: NN-Descent k-NN graph construction
+    // (capped-LSH init, 2 neighbor-of-neighbor rounds) — the navigable
+    // graph a beam search routes over
+    Query("sim_knn_graph", corpusGrain = true, Some(
+      s"""WITH $graphCtes SELECT src AS vec_id, dst AS neighbor_id, cos_sim, rank FROM g$graphRounds ORDER BY vec_id, rank""")) { (s, d) =>
+      graphOf(s, d)
+        .select(col("src").as("vec_id"), col("dst").as("neighbor_id"),
+          col("cos_sim"), col("rank"))
+        .orderBy("vec_id", "rank")
+    },
+
+    // NSW beam search over the session-cached graph: LSH-seeded
+    // multi-entry beam, 3 expand/score/prune hops, top-5 emitted
+    Query("sim_graph_search", corpusGrain = false, Some(graphSearchSql)) { (s, d) =>
+      graphSearch(Tables.embeddings(s, d).select("vec_id", "embedding"),
+        "vec_id", "embedding", graphOf(s, d), col("vec_id") < 10,
+        beam = graphBeam, hops = graphHops, k = graphTopK,
+        tabs = annTabs, bucketCap = graphInitCap,
+        prebuiltNrm = Some(nrmOf(s, d)), prebuiltBkt = Some(bktOf(s, d)))
+        .orderBy("query_id", "rank")
+    },
+
+    // incremental maintenance: a 10% batch splices into the frozen base
+    // graph with batch-sized work (beam-search forward edges + reverse
+    // re-ranks) — the online-insert half of the family; the oracle
+    // replays base build + batch beams + splice definitionally
+    // oracle: base graph over vec_id % 10 != 7, batch beams seeded from the
     // base side only, forward edges + reverse splice re-rank — the
     // committed replay of graphAppend, stage for stage
-    "sim_graph_append" ->
-      s"""WITH ${graphCtesFor(s"vec_id % 10 != $graphBatchMod")}, ${beamCtes(s"vec_id % 10 = $graphBatchMod", s"vec_id % 10 != $graphBatchMod")}, bktq AS (SELECT * FROM bkt WHERE vec_id % 10 = $graphBatchMod), capq AS (SELECT vec_id AS nb, tid, bucket FROM (SELECT vec_id, tid, bucket, row_number() OVER (PARTITION BY tid, bucket ORDER BY vec_id) AS bn FROM bktq) WHERE bn <= $graphInitCap), qpq AS (SELECT vec_id, tid, unnest(${flipsSql(annTabs.head.size)}) AS bucket FROM bktq), bb0 AS (SELECT DISTINCT a.vec_id AS src, b.nb AS dst FROM qpq a JOIN capq b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id != b.nb), bbs AS (SELECT src, dst FROM bb0 UNION SELECT dst AS src, src AS dst FROM bb0), candf AS (SELECT query_id AS src, neighbor_id AS dst FROM fin WHERE rank <= $graphK UNION SELECT src, dst FROM bbs), ${graphTopKSql("candf", "fwd", graphK)}, revc AS (SELECT dst AS src, src AS dst FROM fwd WHERE dst % 10 != $graphBatchMod), tch AS (SELECT DISTINCT src FROM revc), candt AS (SELECT g.src, g.dst FROM g$graphRounds g JOIN tch USING (src) UNION SELECT src, dst FROM revc), ${graphTopKSql("candt", "gt", graphK)}, unt AS (SELECT src, dst, cos_sim, rank FROM g$graphRounds WHERE src NOT IN (SELECT src FROM tch)) SELECT src AS vec_id, dst AS neighbor_id, cos_sim, rank FROM (SELECT * FROM unt UNION ALL SELECT * FROM gt UNION ALL SELECT * FROM fwd) ORDER BY vec_id, rank""",
+    Query("sim_graph_append", corpusGrain = true, Some(
+      s"""WITH ${graphCtesFor(s"vec_id % 10 != $graphBatchMod")}, ${beamCtes(s"vec_id % 10 = $graphBatchMod", s"vec_id % 10 != $graphBatchMod")}, bktq AS (SELECT * FROM bkt WHERE vec_id % 10 = $graphBatchMod), capq AS (SELECT vec_id AS nb, tid, bucket FROM (SELECT vec_id, tid, bucket, row_number() OVER (PARTITION BY tid, bucket ORDER BY vec_id) AS bn FROM bktq) WHERE bn <= $graphInitCap), qpq AS (SELECT vec_id, tid, unnest(${flipsSql(annTabs.head.size)}) AS bucket FROM bktq), bb0 AS (SELECT DISTINCT a.vec_id AS src, b.nb AS dst FROM qpq a JOIN capq b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id != b.nb), bbs AS (SELECT src, dst FROM bb0 UNION SELECT dst AS src, src AS dst FROM bb0), candf AS (SELECT query_id AS src, neighbor_id AS dst FROM fin WHERE rank <= $graphK UNION SELECT src, dst FROM bbs), ${graphTopKSql("candf", "fwd", graphK)}, revc AS (SELECT dst AS src, src AS dst FROM fwd WHERE dst % 10 != $graphBatchMod), tch AS (SELECT DISTINCT src FROM revc), candt AS (SELECT g.src, g.dst FROM g$graphRounds g JOIN tch USING (src) UNION SELECT src, dst FROM revc), ${graphTopKSql("candt", "gt", graphK)}, unt AS (SELECT src, dst, cos_sim, rank FROM g$graphRounds WHERE src NOT IN (SELECT src FROM tch)) SELECT src AS vec_id, dst AS neighbor_id, cos_sim, rank FROM (SELECT * FROM unt UNION ALL SELECT * FROM gt UNION ALL SELECT * FROM fwd) ORDER BY vec_id, rank""")) { (s, d) =>
+      graphAppend(Tables.embeddings(s, d).select("vec_id", "embedding"),
+        "vec_id", "embedding", graphBaseOf(s, d),
+        batchPred = col("vec_id") % 10 === graphBatchMod, k = graphK,
+        beam = graphBeam, hops = graphHops, tabs = annTabs,
+        bucketCap = graphInitCap, prebuiltNrm = Some(nrmOf(s, d)),
+        prebuiltBkt = Some(bktOf(s, d)))
+        .select(col("src").as("vec_id"), col("dst").as("neighbor_id"),
+          col("cos_sim"), col("rank"))
+        .orderBy("vec_id", "rank")
+    },
 
-    "emb_profile" ->
-      s"""SELECT label::BIGINT AS label, count(*) AS n_vecs, min(len(embedding))::BIGINT AS min_dims, max(len(embedding))::BIGINT AS max_dims, min(n2) AS min_norm2, max(n2) AS max_norm2, sum(CASE WHEN bad THEN 1 ELSE 0 END)::BIGINT AS n_nan_vecs FROM (SELECT label, embedding, CASE WHEN isnan(n2r) THEN NULL ELSE n2r END AS n2, bad FROM (SELECT label, embedding, ${sqlDot("embedding", "embedding")} AS n2r, len(list_filter(embedding, x -> isnan(x))) > 0 AS bad FROM embeddings)) GROUP BY label ORDER BY label""",
-    "sim_topk" ->
-      s"""WITH $normCte, q AS (SELECT vec_id AS query_id, ne AS qe FROM nrm WHERE vec_id < 10), c AS (SELECT vec_id AS neighbor_id, ne AS ce FROM nrm), p AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("qe", "ce")}, 4) AS cos_sim FROM q CROSS JOIN c WHERE query_id != neighbor_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM p) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""",
-    "sim_lsh_ann" -> {
+    // the family's recall audit vs brute-force truth — same composed-
+    // chain contract as sim_recall_eval: both sides run the committed
+    // graph build + search, so the audit cannot drift from the config;
+    // truth = the committed brute-force replay, got = the committed
+    // graph-build + beam-search replay
+    Query("sim_graph_recall_eval", corpusGrain = false,
+      Some(recallSql(topkSql, graphSearchSql, "gotr"))) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val truth = simTopK(e, e.filter(col("vec_id") < 10), "vec_id",
+        "embedding", k = graphTopK, prebuiltNrm = Some(nrmOf(s, d)))
+        .select("query_id", "neighbor_id")
+      val got = graphSearch(e, "vec_id", "embedding", graphOf(s, d),
+        col("vec_id") < 10, beam = graphBeam, hops = graphHops,
+        k = graphTopK, tabs = annTabs, bucketCap = graphInitCap,
+        prebuiltNrm = Some(nrmOf(s, d)), prebuiltBkt = Some(bktOf(s, d)))
+        .select("query_id", "neighbor_id")
+      val perQ = truth.join(got.withColumn("h", lit(1)),
+          Seq("query_id", "neighbor_id"), "left")
+        .groupBy("query_id")
+        .agg(count(lit(1)).as("t"), sum(coalesce(col("h"), lit(0L))).as("h"))
+      perQ.agg(
+        count(lit(1)).as("n_queries"),
+        sum(col("t")).as("n_truth"),
+        sum(col("h")).as("n_hit"),
+        Stable.ratioRounded(sum(col("h")), sum(col("t")), 4).as("recall"),
+        min(Stable.ratioRounded(col("h"), col("t"), 4)).as("min_recall"))
+    },
+
+    Query("sim_lsh_ann", corpusGrain = false, Some {
       // multi-probe: the query side also probes every hamming-1 bucket
       // (one sign flipped) — mirrors simLshAnn(multiProbe = true)
       val flips = flipsSql(annTabs.head.size)
       s"""WITH ${bucketsCte(annTabs)}, $normCte, qb AS (SELECT vec_id, tid, unnest($flips) AS bucket FROM bkt WHERE vec_id < 10), cand AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id FROM qb a JOIN bkt b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id != b.vec_id), p AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON query_id = x.vec_id JOIN nrm y ON neighbor_id = y.vec_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM p) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank"""
+    }) { (s, d) =>
+      simLshAnn(Tables.embeddings(s, d).select("vec_id", "embedding"),
+        "vec_id", "embedding", col("vec_id") < 10, annTabs, k = 5,
+        multiProbe = true)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
     },
-    "dedup_embedding" ->
-      s"""WITH ${bucketsCte(dupTabs)}, $normCte, cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM bkt a JOIN bkt b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id < b.vec_id), p AS (SELECT id_a, id_b, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON id_a = x.vec_id JOIN nrm y ON id_b = y.vec_id) SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= 0.4 ORDER BY id_a, id_b""",
-    // the lsh-ann oracle minus the rank stage: threshold, not top-k
-    "sim_range_search" -> {
+
+    Query("sim_ivf_ann", corpusGrain = false, Some(ivfAnnSql)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      // centroid training is INDEX CONSTRUCTION — run once per corpus and
+      // reused by every query (the GroupIndex pattern), not re-trained per
+      // invocation; deterministic, so caching cannot change results
+      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
+        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
+          "vec_id", c = ivfC, iters = ivfIters))
+      val nrmI = normalized(e, "vec_id", "embedding")
+      val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
+        ivfListsTable(nrmI, "vec_id", cents, euclid = true))
+      simIvfAnn(e, "vec_id", "embedding", cents,
+        queryPred = col("vec_id") < 10, nProbe = 2, k = 5, euclid = true,
+        prebuiltLists = Some(lists))
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    },
+
+    // metadata-FILTERED ANN: top-5 among label=2 vectors only, the
+    // predicate pushed to the posting-lists scan (label denormalized
+    // into the index), nProbe raised 2->4 to recover filtered recall
+    // oracle: the sim_ivf_ann chain with the label denormalized into the lists,
+    // the predicate applied before scoring, and crank<=4 probes
+    Query("sim_filtered_ann", corpusGrain = false, Some(
+      s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT f.vec_id AS neighbor_id, f.cid, e.label FROM fr f JOIN embeddings e ON f.vec_id = e.vec_id WHERE f.crank = 1), probes AS (SELECT vec_id AS query_id, cid FROM fr WHERE vec_id < 10 AND crank <= 4), cand AS (SELECT DISTINCT p.query_id, l.neighbor_id FROM probes p JOIN lists l USING (cid) WHERE p.query_id != l.neighbor_id AND l.label = 2), scored2 AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON query_id = x.vec_id JOIN nrm y ON neighbor_id = y.vec_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM scored2) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""")) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
+        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
+          "vec_id", c = ivfC, iters = ivfIters))
+      val nrmI = normalized(e, "vec_id", "embedding")
+      val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
+        ivfListsTable(nrmI, "vec_id", cents, euclid = true))
+      val meta = Tables.embeddings(s, d)
+        .select(col("vec_id").as("neighbor_id"), col("label"))
+      val listsMeta = cachedIndex(s"$d|ivf_lists_meta|$ivfC|$ivfIters")(
+        lists.join(meta, "neighbor_id"))
+      simIvfAnn(e, "vec_id", "embedding", cents,
+        queryPred = col("vec_id") < 10, nProbe = 4, k = 5, euclid = true,
+        prebuiltLists = Some(listsMeta),
+        neighborPred = Some(col("label") === 2))
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    },
+
+    // k-means topic bucketing: every vector's cluster + cluster sizes —
+    // the "balance the corpus by embedding cluster" curation view. The
+    // assignment IS the session-lifetime IVF lists index (built once,
+    // zero-shuffle literal-centroid projection); sizes are one tiny agg
+    // broadcast back, so the corpus-sized side never shuffles.
+    Query("cluster_kmeans", corpusGrain = true, Some(
+      s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT vec_id, cid FROM fr WHERE crank = 1) SELECT l.vec_id, l.cid, s.cluster_n FROM lists l JOIN (SELECT cid, count(*) AS cluster_n FROM lists GROUP BY cid) s USING (cid) ORDER BY l.vec_id""")) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
+        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
+          "vec_id", c = ivfC, iters = ivfIters))
+      val nrmI = normalized(e, "vec_id", "embedding")
+      val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
+        ivfListsTable(nrmI, "vec_id", cents, euclid = true))
+      val assign = lists.select(col("neighbor_id").as("vec_id"), col("cid"))
+      val sizes = assign.groupBy("cid").agg(count(lit(1)).as("cluster_n"))
+      assign.join(broadcast(sizes), "cid")
+        .select("vec_id", "cid", "cluster_n")
+        .orderBy("vec_id")
+    },
+
+    Query("dedup_embedding", corpusGrain = true, Some(
+      s"""WITH ${bucketsCte(dupTabs)}, $normCte, cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM bkt a JOIN bkt b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id < b.vec_id), p AS (SELECT id_a, id_b, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON id_a = x.vec_id JOIN nrm y ON id_b = y.vec_id) SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= 0.4 ORDER BY id_a, id_b""")) { (s, d) =>
+      embeddingPairs(Tables.embeddings(s, d).select("vec_id", "embedding"),
+        "vec_id", "embedding", dupTabs, threshold = 0.4)
+        .select("id_a", "id_b", "cos_sim")
+        .orderBy("id_a", "id_b")
+    },
+
+    // centroid-distance outlier screen over the shared k-means centroids
+    // oracle: the cluster_kmeans assignment CTEs + cosine-to-centroid-direction
+    // scoring; the fold, sqrt and divide replay Spark's literal order
+    Query("emb_outliers", corpusGrain = true, Some(
+      s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT vec_id, cid FROM fr WHERE crank = 1), cc AS (SELECT l.vec_id, l.cid, round(${sqlDotRaw("n.ne", "c.ce")} / sqrt(${sqlDotRaw("c.ce", "c.ce")}), 4) AS cos_c FROM lists l JOIN nrm n ON l.vec_id = n.vec_id JOIN c$ivfIters c ON l.cid = c.cid) SELECT vec_id, cid, cos_c, cos_c < $outlierTau AS is_outlier FROM cc ORDER BY vec_id""")) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
+        _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
+          "vec_id", c = ivfC, iters = ivfIters))
+      embOutliers(e, "vec_id", "embedding", cents, tau = outlierTau)
+        .orderBy("vec_id")
+    },
+
+    // data-dependent answer size: everything with cos >= 0.25 per query
+    // oracle: the lsh-ann oracle minus the rank stage: threshold, not top-k
+    Query("sim_range_search", corpusGrain = true, Some {
       val flips = flipsSql(annTabs.head.size)
       s"""WITH ${bucketsCte(annTabs)}, $normCte, qb AS (SELECT vec_id, tid, unnest($flips) AS bucket FROM bkt WHERE vec_id < 10), cand AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id FROM qb a JOIN bkt b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id != b.vec_id), p AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON query_id = x.vec_id JOIN nrm y ON neighbor_id = y.vec_id) SELECT query_id, neighbor_id, cos_sim FROM p WHERE cos_sim >= 0.25 ORDER BY query_id, neighbor_id"""
+    }) { (s, d) =>
+      simRangeSearch(Tables.embeddings(s, d).select("vec_id", "embedding"),
+        "vec_id", "embedding", col("vec_id") < 10, annTabs, tau = 0.25)
+        .select("query_id", "neighbor_id", "cos_sim")
+        .orderBy("query_id", "neighbor_id")
     },
-    // the dedup_embedding pair CTEs feeding the same recursive min-label
+
+    // SemDeDup-shaped semantic dedup: near-dup embedding pairs ->
+    // components -> keep each cluster's min member with its cluster size.
+    // The component labelling is a session-lifetime INDEX artifact like
+    // the IVF/PQ tables (deterministic — caching cannot change results).
+    // oracle: the dedup_embedding pair CTEs feeding the same recursive min-label
     // fixpoint the Dedup oracles use; keep self-labelled reps + sizes
-    "dedup_semantic_e2e" ->
-      s"""WITH RECURSIVE ${bucketsCte(dupTabs)}, $normCte, cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM bkt a JOIN bkt b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id < b.vec_id), p AS (SELECT id_a, id_b, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON id_a = x.vec_id JOIN nrm y ON id_b = y.vec_id), prs AS (SELECT id_a, id_b FROM p WHERE cos_sim >= 0.4), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT vec_id, vec_id FROM embeddings UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id), sizes AS (SELECT cluster, count(*) AS cluster_n FROM comp GROUP BY cluster) SELECT c.id AS vec_id, s.cluster_n FROM comp c JOIN sizes s ON c.cluster = s.cluster WHERE c.id = c.cluster ORDER BY vec_id""",
-    "sim_knn_join" ->
-      s"""WITH ${bucketsCte(dupTabs)}, $normCte, capped AS (SELECT tid, bucket, vec_id FROM (SELECT tid, bucket, vec_id, row_number() OVER (PARTITION BY tid, bucket ORDER BY vec_id) AS bn FROM bkt) WHERE bn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id FROM bkt a JOIN capped b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id != b.vec_id), p AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON query_id = x.vec_id JOIN nrm y ON neighbor_id = y.vec_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM p) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""",
-    // the sim_knn_join chain replayed at REP grain: corpus = embeddings ∪
+    Query("dedup_semantic_e2e", corpusGrain = true, Some(
+      s"""WITH RECURSIVE ${bucketsCte(dupTabs)}, $normCte, cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM bkt a JOIN bkt b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id < b.vec_id), p AS (SELECT id_a, id_b, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON id_a = x.vec_id JOIN nrm y ON id_b = y.vec_id), prs AS (SELECT id_a, id_b FROM p WHERE cos_sim >= 0.4), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT vec_id, vec_id FROM embeddings UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id), sizes AS (SELECT cluster, count(*) AS cluster_n FROM comp GROUP BY cluster) SELECT c.id AS vec_id, s.cluster_n FROM comp c JOIN sizes s ON c.cluster = s.cluster WHERE c.id = c.cluster ORDER BY vec_id""")) { (s, d) =>
+      val comps = cachedIndex(s"$d|semcomp|0.4") {
+        val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+        val pairs = embeddingPairs(e, "vec_id", "embedding", dupTabs,
+          threshold = 0.4).select("id_a", "id_b")
+        Dedup.connectedComponents(e.select("vec_id"), "vec_id",
+          pairs, "id_a", "id_b")
+      }
+      val sizes = comps.groupBy("cluster").agg(count(lit(1)).as("cluster_n"))
+      comps.filter(col("vec_id") === col("cluster")).select("vec_id")
+        .join(sizes.select(col("cluster").as("vec_id"), col("cluster_n")), "vec_id")
+        .orderBy("vec_id")
+    },
+
+    // every point's top-3 bucket-mate neighbors (directed self-join)
+    Query("sim_knn_join", corpusGrain = true, Some(
+      s"""WITH ${bucketsCte(dupTabs)}, $normCte, capped AS (SELECT tid, bucket, vec_id FROM (SELECT tid, bucket, vec_id, row_number() OVER (PARTITION BY tid, bucket ORDER BY vec_id) AS bn FROM bkt) WHERE bn <= ${Dedup.defaultBucketCap}), cand AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id FROM bkt a JOIN capped b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id != b.vec_id), p AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON query_id = x.vec_id JOIN nrm y ON neighbor_id = y.vec_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM p) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""")) { (s, d) =>
+      simKnnJoin(Tables.embeddings(s, d).select("vec_id", "embedding"),
+        "vec_id", "embedding", dupTabs, k = 3)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    },
+
+    // the copy-heavy scale path: the testdata vectors are all distinct, so
+    // the registered corpus UNIONs an id-shifted exact copy of every vector
+    // — the collapse and fan-back stages then do real work at oracle scale
+    // (each rep fans back to two query ids), not just pass-through
+    // oracle: the sim_knn_join chain replayed at REP grain: corpus = embeddings ∪
     // id-shifted copy; reps = GROUP BY embedding min(vec_id); buckets/norm
     // CTEs run over the rep relation; fan-back joins copies on exact
     // vector equality — the same copy identity the Spark collapse uses
-    "sim_knn_join_rep" -> knnRepOracle,
-    // the routed operator on the same copy-heavy corpus: the router must
+    Query("sim_knn_join_rep", corpusGrain = true, Some(knnRepOracle)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val corpus = e.union(
+        e.select((col("vec_id") + 10000).as("vec_id"), col("embedding")))
+      simKnnJoinRep(corpus, "vec_id", "embedding", dupTabs, k = 3)
+        .orderBy("query_id", "rank")
+    },
+
+    // the ROUTED kNN join on the copy-heavy corpus: the distinct-ratio
+    // probe (one HLL agg) must fire and route to rep grain — the oracle
+    // IS the rep-grain answer, so a mis-route hash-fails; SimilaritySpec
+    // pins the opposite decision on the all-distinct corpus
+    // oracle: the routed operator on the same copy-heavy corpus: the router must
     // pick rep grain, and the result must be the rep-grain answer
-    "sim_knn_join_auto" -> knnRepOracle,
+    Query("sim_knn_join_auto", corpusGrain = true, Some(knnRepOracle)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val corpus = e.union(
+        e.select((col("vec_id") + 10000).as("vec_id"), col("embedding")))
+      simKnnJoinAuto(corpus, "vec_id", "embedding", dupTabs, k = 3)
+        .orderBy("query_id", "rank")
+    },
 
-    "cluster_kmeans" ->
-      s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT vec_id, cid FROM fr WHERE crank = 1) SELECT l.vec_id, l.cid, s.cluster_n FROM lists l JOIN (SELECT cid, count(*) AS cluster_n FROM lists GROUP BY cid) s USING (cid) ORDER BY l.vec_id""",
-    // the cluster_kmeans assignment CTEs + cosine-to-centroid-direction
-    // scoring; the fold, sqrt and divide replay Spark's literal order
-    "emb_outliers" ->
-      s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT vec_id, cid FROM fr WHERE crank = 1), cc AS (SELECT l.vec_id, l.cid, round(${sqlDotRaw("n.ne", "c.ce")} / sqrt(${sqlDotRaw("c.ce", "c.ce")}), 4) AS cos_c FROM lists l JOIN nrm n ON l.vec_id = n.vec_id JOIN c$ivfIters c ON l.cid = c.cid) SELECT vec_id, cid, cos_c, cos_c < $outlierTau AS is_outlier FROM cc ORDER BY vec_id""",
-
-    "sim_pq_ann" -> pqOracle,
-    // SQ8: per-dim min/max training, byte encoding, reconstruction and
+    // oracle: SQ8: per-dim min/max training, byte encoding, reconstruction and
     // asymmetric scoring replayed stage-for-stage; shares the PQ chain's
     // shortlist/re-rank tail (same shortlist size, k = 5)
-    "sim_sq8_ann" ->
-      (s"""WITH $sq8CtesSql, """ +
+    Query("sim_sq8_ann", corpusGrain = false, Some(
+      s"""WITH $sq8CtesSql, """ +
         s"""rec AS (SELECT c.vec_id, list_transform(range(1, len(cs) + 1), i -> v.mnl[i] + (cs[i] * v.scl[i]) / 255.0) AS re FROM codes c CROSS JOIN qv v), """ +
         s"""sc AS (SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id, round(${sqlDotRaw("q.ne", "x.re")}, 4) AS approx_sim FROM rec x CROSS JOIN (SELECT vec_id, ne FROM nrm WHERE vec_id < 10) q WHERE q.vec_id != x.vec_id), """ +
-        pqTail),
-    // same train + encode chain; per-dim |error| floor-quantized to 1e-6
-    // and folded as exact integers (order-free both engines)
-    "emb_quantize_error" ->
-      (s"""WITH $sq8CtesSql, """ +
-        s"""er AS (SELECT n.vec_id, list_transform(range(1, len(n.ne) + 1), i -> floor(abs(n.ne[i] - (v.mnl[i] + (c.cs[i] * v.scl[i]) / 255.0)) * 1000000.0)::BIGINT) AS e FROM nrm n JOIN codes c USING (vec_id) CROSS JOIN qv v) """ +
-        s"""SELECT vec_id, list_max(e)::BIGINT AS max_abs_q6, list_sum(list_transform(e, x -> x * x))::BIGINT AS sse_q12, list_max(e) / 1000000.0 AS max_abs_err FROM er ORDER BY vec_id"""),
-    "sim_ivfpq_ann" -> ivfPqOracle,
-    // identical results to the in-session index — same oracle
-    "sim_ivfpq_persisted" -> ivfPqOracle,
-    "sim_ivfpq_append" -> ivfPqAppendOracle,
-    "sim_ivfpq_res_ann" -> resOracle,
-    // the sim_ivf_ann chain with the label denormalized into the lists,
-    // the predicate applied before scoring, and crank<=4 probes
-    "sim_filtered_ann" ->
-      s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT f.vec_id AS neighbor_id, f.cid, e.label FROM fr f JOIN embeddings e ON f.vec_id = e.vec_id WHERE f.crank = 1), probes AS (SELECT vec_id AS query_id, cid FROM fr WHERE vec_id < 10 AND crank <= 4), cand AS (SELECT DISTINCT p.query_id, l.neighbor_id FROM probes p JOIN lists l USING (cid) WHERE p.query_id != l.neighbor_id AND l.label = 2), scored2 AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON query_id = x.vec_id JOIN nrm y ON neighbor_id = y.vec_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM scored2) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""",
-    "sim_ivf_ann" ->
-      s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT vec_id AS neighbor_id, cid FROM fr WHERE crank = 1), probes AS (SELECT vec_id AS query_id, cid FROM fr WHERE vec_id < 10 AND crank <= 2), cand AS (SELECT DISTINCT p.query_id, l.neighbor_id FROM probes p JOIN lists l USING (cid) WHERE p.query_id != l.neighbor_id), scored2 AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON query_id = x.vec_id JOIN nrm y ON neighbor_id = y.vec_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM scored2) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank"""
-  )
+        pqTail)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val nrm = normalized(e, "vec_id", "embedding")
+      // training is index construction: once per corpus (2×dims doubles)
+      val (mn, sc) = sq8Cache.computeIfAbsent(d, _ => sq8Train(nrm))
+      val codes = cachedIndex(s"$d|sq8_codes")(
+        sq8CodesTable(nrm, "vec_id", mn, sc))
+      simSq8Ann(e, "vec_id", "embedding", col("vec_id") < 10, mn, sc,
+        shortlist = pqShort, k = 5, prebuiltCodes = Some(codes))
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    },
 
-  /** The recall audit's oracle COMPOSES the two committed replay chains
-    * (brute-force truth, IVF result) as nested-WITH CTEs and joins them
-    * — one source of each chain's SQL, so the audit can never drift
-    * from the queries it audits. */
-  val oracles: Map[String, String] = oraclesBase + ("sim_recall_eval" -> {
-    val tru = oraclesBase("sim_topk")
-    val ann = oraclesBase("sim_ivf_ann")
-    s"""WITH tru AS ($tru), annr AS ($ann), pq AS (SELECT t.query_id, count(*) AS t, sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS h FROM tru t LEFT JOIN annr a ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id GROUP BY t.query_id) SELECT count(*) AS n_queries, sum(t)::BIGINT AS n_truth, sum(h)::BIGINT AS n_hit, ${Stable.sqlRatioRounded("sum(h)", "sum(t)", 4)} AS recall, min(${Stable.sqlRatioRounded("h", "t", 4)}) AS min_recall FROM pq"""
-  }) + ("sim_graph_recall_eval" -> {
-    // same composed-chain contract: truth = the committed brute-force
-    // replay, got = the committed graph-build + beam-search replay
-    val tru = oraclesBase("sim_topk")
-    val got = oraclesBase("sim_graph_search")
-    s"""WITH tru AS ($tru), gotr AS ($got), pq AS (SELECT t.query_id, count(*) AS t, sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS h FROM tru t LEFT JOIN gotr a ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id GROUP BY t.query_id) SELECT count(*) AS n_queries, sum(t)::BIGINT AS n_truth, sum(h)::BIGINT AS n_hit, ${Stable.sqlRatioRounded("sum(h)", "sum(t)", 4)} AS recall, min(${Stable.sqlRatioRounded("h", "t", 4)}) AS min_recall FROM pq"""
-  })
+    // the quantizer's acceptance gate: re-encode + decode through the
+    // trained map and report per-vector error vs the exact embedding
+    // oracle: same train + encode chain; per-dim |error| floor-quantized to 1e-6
+    // and folded as exact integers (order-free both engines)
+    Query("emb_quantize_error", corpusGrain = true, Some(
+      s"""WITH $sq8CtesSql, """ +
+        s"""er AS (SELECT n.vec_id, list_transform(range(1, len(n.ne) + 1), i -> floor(abs(n.ne[i] - (v.mnl[i] + (c.cs[i] * v.scl[i]) / 255.0)) * 1000000.0)::BIGINT) AS e FROM nrm n JOIN codes c USING (vec_id) CROSS JOIN qv v) """ +
+        s"""SELECT vec_id, list_max(e)::BIGINT AS max_abs_q6, list_sum(list_transform(e, x -> x * x))::BIGINT AS sse_q12, list_max(e) / 1000000.0 AS max_abs_err FROM er ORDER BY vec_id""")) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val nrm = normalized(e, "vec_id", "embedding")
+      val (mn, sc) = sq8Cache.computeIfAbsent(d, _ => sq8Train(nrm))
+      sq8QuantizeError(nrm, "vec_id", mn, sc)
+        .orderBy("vec_id")
+    },
+
+    Query("sim_pq_ann", corpusGrain = false, Some(pqOracle)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      // codebook training is index construction: once per corpus, cached
+      // like the IVF centroids (deterministic — caching can't change results)
+      val cbs = pqCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
+        _ => pqCodebooks(normalized(e, "vec_id", "embedding"), "vec_id",
+          pqM, pqSubDims, pqKs, pqIters))
+      val codes = cachedIndex(s"$d|pq_codes|$pqM|$pqKs|$pqIters")(
+        pqCodesTable(normalized(e, "vec_id", "embedding"), "vec_id", cbs, pqSubDims))
+      simPqAnn(e, "vec_id", "embedding", cbs, queryPred = col("vec_id") < 10,
+        subDims = pqSubDims, shortlist = pqShort, k = 5,
+        prebuiltCodes = Some(codes))
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    },
+
+    Query("sim_ivfpq_ann", corpusGrain = false, Some(ivfPqOracle)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val nrm = normalized(e, "vec_id", "embedding")
+      val coarse = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
+        _ => kmeansCentroids(nrm, "vec_id", c = ivfC, iters = ivfIters))
+      val cbs = pqCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
+        _ => pqCodebooks(nrm, "vec_id", pqM, pqSubDims, pqKs, pqIters))
+      val lists = cachedIndex(s"$d|ivfpq_codes|$ivfC|$pqM|$pqKs|$pqIters")(
+        ivfPqCodesTable(nrm, "vec_id", coarse, cbs, pqSubDims))
+      simIvfPqAnn(e, "vec_id", "embedding", coarse, cbs,
+        queryPred = col("vec_id") < 10, nProbe = 2,
+        subDims = pqSubDims, shortlist = pqShort, k = 5,
+        prebuiltLists = Some(lists))
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    },
+
+    // The index-persistence lifecycle: the IVF-PQ list/code table is
+    // BUILT once, written as parquet (the durable index artifact a real
+    // deployment ships between jobs), READ BACK like any table, and
+    // queried — results identical to the in-session index, checked by the
+    // SAME oracle as sim_ivfpq_ann. The read-back scan prunes to the
+    // narrow code columns like any parquet source.
+    // oracle: identical results to the in-session index — same oracle
+    Query("sim_ivfpq_persisted", corpusGrain = false, Some(ivfPqOracle)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val nrm = normalized(e, "vec_id", "embedding")
+      val coarse = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
+        _ => kmeansCentroids(nrm, "vec_id", c = ivfC, iters = ivfIters))
+      val cbs = pqCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
+        _ => pqCodebooks(nrm, "vec_id", pqM, pqSubDims, pqKs, pqIters))
+      // kmeansSampleCut in the key: the coarse centroids are a function
+      // of the training-sample draw, so a sampling change re-keys the
+      // artifact instead of serving codes quantized under stale centroids
+      val path = ivfPqArtifactPath(e, d)
+      val lists = graft.sources.Io.atomicParquetArtifact(s, path)(
+        ivfPqCodesTable(nrm, "vec_id", coarse, cbs, pqSubDims))
+      simIvfPqAnn(e, "vec_id", "embedding", coarse, cbs,
+        queryPred = col("vec_id") < 10, nProbe = 2,
+        subDims = pqSubDims, shortlist = pqShort, k = 5,
+        prebuiltLists = Some(lists))
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    },
+
+    // INCREMENTAL index maintenance — the `dedup_incremental` pattern
+    // for the sim family: the base index is built WITHOUT the new batch
+    // (and cached like any session index artifact); the batch is then
+    // encoded against the FROZEN coarse/PQ quantizers — a pure batch-
+    // sized projection, no corpus rescan, no retraining — and its rows
+    // appended. Because encoding is deterministic under frozen
+    // quantizers, the appended index answers queries identically to a
+    // from-scratch encode of the unioned corpus — which is exactly what
+    // the oracle replays. Batch ids sit above ivfC so the base keeps
+    // every k-means/PQ seed row.
+    Query("sim_ivfpq_append", corpusGrain = false, Some(ivfPqAppendOracle)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val isBatch = col("vec_id") >= ivfC && col("vec_id") % 10 === 7
+      val nrmBase = normalized(e.filter(!isBatch), "vec_id", "embedding")
+      val coarse = kmeansCache.computeIfAbsent(s"$d|app|$ivfC|$ivfIters",
+        _ => kmeansCentroids(nrmBase, "vec_id", c = ivfC, iters = ivfIters))
+      val cbs = pqCache.computeIfAbsent(s"$d|app|$pqM|$pqKs|$pqIters",
+        _ => pqCodebooks(nrmBase, "vec_id", pqM, pqSubDims, pqKs, pqIters))
+      val baseLists = cachedIndex(s"$d|ivfpq_app_base|$ivfC|$pqM|$pqKs|$pqIters")(
+        ivfPqCodesTable(nrmBase, "vec_id", coarse, cbs, pqSubDims))
+      val batchCodes = ivfPqCodesTable(
+        normalized(e.filter(isBatch), "vec_id", "embedding"),
+        "vec_id", coarse, cbs, pqSubDims)
+      simIvfPqAnn(e, "vec_id", "embedding", coarse, cbs,
+        queryPred = col("vec_id") < 10, nProbe = 2,
+        subDims = pqSubDims, shortlist = pqShort, k = 5,
+        prebuiltLists = Some(baseLists.union(batchCodes)))
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    },
+
+    Query("sim_ivfpq_res_ann", corpusGrain = false, Some(resOracle)) { (s, d) =>
+      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+      val nrm = normalized(e, "vec_id", "embedding")
+      val coarse = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
+        _ => kmeansCentroids(nrm, "vec_id", c = ivfC, iters = ivfIters))
+      val rcbs = pqResCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
+        _ => pqResCodebooks(nrm, "vec_id", coarse, pqM, pqSubDims, pqKs, pqIters))
+      val lists = cachedIndex(s"$d|ivfpqres_codes|$ivfC|$pqM|$pqKs|$pqIters")(
+        resCodesTable(nrm, "vec_id", coarse, rcbs, pqSubDims))
+      simIvfPqResAnn(e, "vec_id", "embedding", coarse, rcbs,
+        queryPred = col("vec_id") < 10, nProbe = 2,
+        subDims = pqSubDims, shortlist = pqShort, k = 5,
+        prebuiltLists = Some(lists))
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .orderBy("query_id", "rank")
+    }
+  )
 }

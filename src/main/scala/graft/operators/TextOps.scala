@@ -4,7 +4,7 @@ import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Text analysis for LLM training-data pipelines: token counting, quality
   * scoring, language ID, content fingerprinting, exact dedup.
@@ -1517,443 +1517,6 @@ object TextOps {
     ("\u00f0\u0178\u017d\u2030 party",
       "\ud83c\udf89 party", 1))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_tokencount" -> ((s, d) =>
-      tokenCount(Tables.documents(s, d).select("doc_id", "text"), "text")
-        .select("doc_id", "ws_tokens", "re_tokens")
-        .orderBy("doc_id")),
-
-    "text_quality" -> ((s, d) =>
-      quality(Tables.documents(s, d).select("doc_id", "text"), "text")
-        .select("doc_id", "n_chars_m", "n_tokens", "alpha_ratio", "punct_ratio",
-          "stop_ratio", "quality_score")
-        .orderBy("doc_id")),
-
-    // classifier-gate filtering: fixed-weight linear head over the
-    // quality features, thresholded on the logit (theta = 1.7, ~the corpus median)
-    "text_classifier_gate" -> ((s, d) =>
-      classifierFilter(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text",
-        wAlpha = 2.0, wPunct = -3.0, wStop = 1.5, wLen = 0.8,
-        intercept = -0.5, theta = 1.7)
-        .orderBy("doc_id")),
-
-    // TRAIN the filter in-engine: ridge-logistic fit (2 Newton steps on
-    // exact integer sums) DISTILLING the fixed-weight gate — y is the
-    // committed text_classifier_gate decision, the student sees only
-    // the punct-ratio + capped-length features (the cheap subset), and
-    // train_acc reports how much of the hand gate the learned filter
-    // reproduces. The DCLM/fastText "train the classifier in the
-    // pipeline" story without leaving the engine.
-    "text_classifier_train" -> ((s, d) => {
-      val doc = Tables.documents(s, d)
-      val t = col("text")
-      val toks = tokens(t)
-      val feats0 = doc.select(
-        greatest(length(t), lit(1)).cast("long").as("ln"),
-        length(regexp_replace(t, "[^a-zA-Z]", "")).cast("long").as("alpha"),
-        length(regexp_replace(t, "[a-zA-Z0-9\\s]", "")).cast("long").as("punct"),
-        greatest(size(toks), lit(1)).cast("long").as("ntok"),
-        hitCount(toks, stopEn).cast("long").as("stops"))
-      // teacher = the gate's exact logit expression (same rounded
-      // ratios); student features are 1e4-scaled integers
-      val teacher = lit(-0.5) +
-        lit(2.0) * Stable.ratioRounded(col("alpha"), col("ln"), 4) +
-        lit(-3.0) * Stable.ratioRounded(col("punct"), col("ln"), 4) +
-        lit(1.5) * Stable.ratioRounded(col("stops"), col("ntok"), 4) +
-        lit(0.8) * least(col("ntok").cast("double") / 100.0, lit(1.0))
-      val feats = feats0.select(
-        (teacher >= 1.7).cast("long").as("y"),
-        expr("(20000 * punct + ln) div (2 * ln)").as("x1"),
-        (least(col("ntok"), lit(100L)) * 100L).as("x2"))
-      logitTrain(feats, col("y"), col("x1"), col("x2"))
-    }),
-
-    // the k-feature widening (r15): same distilled-gate teacher, but
-    // the student sees the FULL fastText-class feature set — alpha /
-    // punct / stopword / digit ratios + capped length, 5 features +
-    // intercept solved by generated Gauss elimination (the 3×3 Cramer
-    // ceiling removed); same bit-reproducible two-step IRLS contract
-    "text_classifier_train_k" -> ((s, d) => {
-      val doc = Tables.documents(s, d)
-      val t = col("text")
-      val toks = tokens(t)
-      val feats0 = doc.select(
-        greatest(length(t), lit(1)).cast("long").as("ln"),
-        length(regexp_replace(t, "[^a-zA-Z]", "")).cast("long").as("alpha"),
-        length(regexp_replace(t, "[a-zA-Z0-9\\s]", "")).cast("long").as("punct"),
-        length(regexp_replace(t, "[^0-9]", "")).cast("long").as("digits"),
-        greatest(size(toks), lit(1)).cast("long").as("ntok"),
-        hitCount(toks, stopEn).cast("long").as("stops"))
-      val teacher = lit(-0.5) +
-        lit(2.0) * Stable.ratioRounded(col("alpha"), col("ln"), 4) +
-        lit(-3.0) * Stable.ratioRounded(col("punct"), col("ln"), 4) +
-        lit(1.5) * Stable.ratioRounded(col("stops"), col("ntok"), 4) +
-        lit(0.8) * least(col("ntok").cast("double") / 100.0, lit(1.0))
-      val feats = feats0.select(
-        (teacher >= 1.7).cast("long").as("y"),
-        expr("(20000 * alpha + ln) div (2 * ln)").as("x1"),
-        expr("(20000 * punct + ln) div (2 * ln)").as("x2"),
-        expr("(20000 * stops + ntok) div (2 * ntok)").as("x3"),
-        (least(col("ntok"), lit(100L)) * 100L).as("x4"),
-        expr("(20000 * digits + ln) div (2 * ln)").as("x5"))
-      logitTrainK(feats, col("y"),
-        Seq(col("x1"), col("x2"), col("x3"), col("x4"), col("x5")))
-    }),
-
-    // 3-epoch anneal: epoch 1 sees everything, epoch 3 keeps 10% low /
-    // 50% mid / all high — band thresholds fixed at the corpus logit
-    // terciles (1.55 / 1.8), corpus-independent by contract
-    "mix_anneal" -> ((s, d) =>
-      mixAnneal(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text",
-        wAlpha = 2.0, wPunct = -3.0, wStop = 1.5, wLen = 0.8,
-        intercept = -0.5, bandLo = 1.55, bandHi = 1.8,
-        schedule = Seq((1L, 1.0, 1.0, 1.0), (2L, 0.5, 1.0, 1.0),
-          (3L, 0.1, 0.5, 1.0)))
-        .orderBy("doc_id", "epoch")),
-
-    "text_repetition" -> ((s, d) =>
-      repetition(Tables.documents(s, d).select("doc_id", "text"), "text")
-        .select("doc_id", "n_tokens", "dup_2gram_frac", "dup_3gram_frac")
-        .orderBy("doc_id")),
-
-    // BPE pair statistics over the corpus vocabulary (top 256 pairs)
-    "text_bpe_pairs" -> ((s, d) =>
-      bpePairCounts(Tables.documents(s, d).select("text"), "text", topK = 256)),
-
-    // the merge LOOP on top: k greedy merges over the vocabulary table
-    "text_bpe_merges" -> ((s, d) =>
-      bpeMerges(Tables.documents(s, d).select("text"), "text", k = bpeMergeK)
-        .orderBy("merge_rank")),
-
-    // the PRODUCTION trainer: vocabulary pulled to one node once, the
-    // k merges sequenced locally — same table as text_bpe_merges (same
-    // oracle verbatim), without k sequential Spark jobs
-    "text_bpe_merges_local" -> ((s, d) =>
-      bpeMergesLocal(Tables.documents(s, d).select("text"), "text", k = bpeMergeK)
-        .orderBy("merge_rank")),
-
-    // ENCODE with the learned merges: true tokenizer token counts per
-    // doc. The merge table is a session artifact (trained once, like the
-    // ANN indexes); text_bpe_merges above stays deliberately raw-priced.
-    "text_bpe_encode" -> ((s, d) =>
-      bpeEncode(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", mergesFor(s, d))
-        .orderBy("doc_id")),
-
-    // CANONICAL-semantics encode against the PUBLIC GPT-2 merge excerpt:
-    // the oracle replays the published one-merge-at-a-time lowest-rank-
-    // leftmost loop as a recursive CTE over the same external table, so
-    // the engine's textbook mode is checked against the ecosystem's
-    // algorithm, not against its own trainer
-    "text_bpe_encode_textbook" -> ((s, d) =>
-      bpeEncodeWordsTextbook(Tables.documents(s, d).select("text"), "text",
-        gpt2MergesExcerpt)
-        .orderBy("w")),
-
-    // crawl ingest: a deterministic HTML wrapping of each doc (nav bar,
-    // script, styles, entity-bearing footer) pushed through the
-    // tag-strip + line-density extractor — body prose survives,
-    // boilerplate lines drop
-    "text_html_extract" -> ((s, d) =>
-      htmlExtract(htmlWrapped(Tables.documents(s, d).select("doc_id", "text")),
-        "doc_id", "html")
-        .orderBy("doc_id")),
-
-    // the crawl-to-corpus story END-TO-END in one plan: wrap → extract →
-    // quality-score the EXTRACTED text → gate → exact-dedup the
-    // survivors (reps carry their copy count) — extraction feeding the
-    // existing quality/dedup chain, not standing beside it
-    "text_html_pipeline" -> ((s, d) => {
-      val ext = htmlExtract(
-        htmlWrapped(Tables.documents(s, d).select("doc_id", "text")),
-        "doc_id", "html")
-      val scored = quality(ext.select(col("doc_id"), col("main_text")), "main_text")
-      scored.filter(col("quality_score") >= 0.9)
-        .groupBy(col("main_text"))
-        .agg(min(struct(col("doc_id"), col("quality_score"))).as("_f"),
-          count(lit(1)).as("n_dupes"))
-        .select(col("_f.doc_id").as("doc_id"),
-          col("_f.quality_score").as("quality_score"), col("n_dupes"))
-        .orderBy("doc_id")
-    }),
-
-    // OOV rate per doc vs the corpus's own top-1000 terms
-    "text_oov_rate" -> ((s, d) =>
-      oovRate(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text",
-        vocabK = 1000)
-        .orderBy("doc_id")),
-
-    "text_ngram_counts" -> ((s, d) =>
-      ngramCounts(Tables.documents(s, d).select("text"), "text", n = 2, topK = 100)),
-
-    "text_chunks" -> ((s, d) =>
-      tokenChunks(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text",
-        chunkTokens = 16, overlap = 4)
-        .orderBy("doc_id", "chunk_id")),
-
-    "text_langid" -> ((s, d) =>
-      langId(Tables.documents(s, d).select("doc_id", "text"), "text")
-        .select("doc_id", "en_hits", "es_hits", "fr_hits", "lang_pred")
-        .orderBy("doc_id")),
-
-    // langid accuracy audit: the predictor's confusion matrix over a
-    // fixture whose text is SYNTHESIZED to match its label (r13; the
-    // r12 round honestly reported the corpus's lang column does not
-    // track its text, so the old matrix measured label noise, not the
-    // classifier). The Web-family formula-fixture contract: labels and
-    // text both derive from doc_id, the engine must reach the matrix
-    // through the real classifier, and the deterministic contamination
-    // classes put KNOWN off-diagonal cells (es→en, fr→es, und→en tie
-    // flips at doc_id%15/%20 density) on the oracle path while the
-    // diagonal stays dominant — a langid regression MOVES this matrix.
-    // Answer-sized (|langs|² cells) at any corpus size.
-    "text_langid_eval" -> ((s, d) => {
-      val fix = synthesizeLangDocs(Tables.documents(s, d), "doc_id")
-      langId(fix.select("doc_id", "text"), "text")
-        .select("doc_id", "lang_pred")
-        .join(fix.select("doc_id", "lang"), "doc_id")
-        .groupBy("lang", "lang_pred")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang", "lang_pred")
-    }),
-
-    "text_fingerprint" -> ((s, d) =>
-      fingerprint(Tables.documents(s, d).select("doc_id", "text"), "text")
-        .select("doc_id", "fp")
-        .orderBy("doc_id")),
-
-    "dedup_exact" -> ((s, d) =>
-      dedupExact(Tables.documents(s, d), "doc_id", "text")
-        .select("content_hash", "keep_id", "n_dupes")
-        .orderBy("keep_id")),
-
-    "dedup_normalized" -> ((s, d) =>
-      dedupNormalized(Tables.documents(s, d), "doc_id", "text")
-        .select("norm_hash", "keep_id", "n_dupes", "n_raw_variants")
-        .orderBy("keep_id")),
-
-    // Unicode NFC normalization (UAX #15) over a multilingual fixture:
-    // each doc's prefix is decorated with a DECOMPOSED suffix (combining
-    // acute/diaeresis/tilde, Hangul conjoining jamo) chosen by residue;
-    // the engine composes via the native quick-check expression and the
-    // oracle replays with DuckDB's own nfc_normalize over chr()-built
-    // codepoints — two independent Unicode implementations must agree
-    // on every composed byte (md5), codepoint count, and changed flag
-    "text_nfc_normalize" -> ((s, d) => {
-      // explicit \uXXXX escapes so the fixture is decomposed BY
-      // CONSTRUCTION (a composed literal would make the query a no-op)
-      val suffix = element_at(array(
-        lit(" cafe\u0301"),        // e + COMBINING ACUTE
-        lit(" u\u0308ber"),        // u + COMBINING DIAERESIS
-        lit(" espan\u0303ol"),     // n + COMBINING TILDE
-        lit(" \u1112\u1161\u11ab\u1100\u1173\u11af")), // hangul jamo
-        (pmod(col("doc_id"), lit(4)) + 1).cast("int"))
-      Tables.documents(s, d)
-        .select(col("doc_id").cast("bigint").as("doc_id"),
-          concat(substring(col("text"), 1, 24), suffix).as("raw"))
-        .select(col("doc_id"), col("raw"),
-          graft.functions.GraftFunctions.unicodeNormalize(col("raw"), "NFC")
-            .as("nfc_text"))
-        .select(col("doc_id"),
-          length(col("raw")).cast("bigint").as("raw_len"),
-          length(col("nfc_text")).cast("bigint").as("nfc_len"),
-          md5(col("nfc_text")).as("nfc_md5"),
-          (col("raw") =!= col("nfc_text")).cast("bigint").as("changed"))
-        .orderBy("doc_id")
-    }),
-
-    // mojibake repair: the native sloppy-cp1252 round-trip vs the
-    // literal table — single, double and emoji mojibake repair; clean
-    // ASCII passes through with rounds=0
-    "text_fix_mojibake" -> ((s, d) => {
-      val v = pmod(col("doc_id"), lit(mojiVariants.length)).cast("int")
-      val raw = concat(lit("Doc "), col("doc_id").cast("string"), lit(": "),
-        element_at(array(mojiVariants.map(t => lit(t._1)): _*), v + 1))
-      Tables.documents(s, d)
-        .select(col("doc_id").cast("bigint").as("doc_id"), raw.as("raw"))
-        .select(col("doc_id"), col("raw"),
-          graft.functions.GraftFunctions.fixMojibake(col("raw")).as("r"))
-        .select(col("doc_id"), col("raw"),
-          col("r.fixed").as("fixed"), col("r.rounds").as("rounds"))
-        .orderBy("doc_id")
-    }),
-
-    // Dice-scored adjacent-token collocations, count floor 5, top 100
-    "text_collocations" -> ((s, d) =>
-      collocations(Tables.documents(s, d).select("text"), "text",
-        minCount = 5L, topK = 100)),
-
-    // corpus-trained bigram LM score (the perplexity-filter stand-in)
-    "text_lm_score" -> ((s, d) =>
-      lmScore(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // doc-frequency of repeated sentences over the same punctuated
-    // derivation — the strip-before-tokenize boilerplate report
-    "text_boilerplate" -> ((s, d) =>
-      boilerplate(Tables.documents(s, d)
-          .select(col("doc_id"),
-            regexp_replace(col("text"), " table ", " table. ").as("text")),
-        "doc_id", "text", minDocs = 2L, topK = 100)),
-
-    // the corpus is unpunctuated word soup, so the query derives a
-    // deterministically punctuated column first (same rewrite in the
-    // oracle) — the segmenter itself is what's under test
-    "text_sentences" -> ((s, d) =>
-      sentences(Tables.documents(s, d)
-          .select(col("doc_id"),
-            regexp_replace(col("text"), " table ", " table. ").as("text")),
-        "doc_id", "text")
-        .orderBy("doc_id", "sent_idx")),
-
-    // sentence-level dedup with removal over the same punctuated column:
-    // repeated sentences survive only in their lowest-id doc
-    "text_dedup_sentences" -> ((s, d) =>
-      dedupSentences(Tables.documents(s, d)
-          .select(col("doc_id"),
-            regexp_replace(col("text"), " table ", " table. ").as("text")),
-        "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // the ExactSubstr pass (Lee et al. 2022): every >=8-token span
-    // duplicated anywhere in the corpus (cross-doc or within-doc) is
-    // removed everywhere except its first (doc, pos) occurrence, and
-    // each doc's surviving tokens reassemble into a cleaned corpus
-    "text_dedup_spans_removal" -> ((s, d) =>
-      dedupSpansRemoval(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", k = 8)
-        .orderBy("doc_id")),
-
-    // events.props carries digits, so the mask is non-vacuous there
-    "text_pii_mask" -> ((s, d) =>
-      piiMask(Tables.events(s, d).select("event_id", "props"), "props", "masked")
-        .select("event_id", "masked")
-        .orderBy("event_id")),
-
-    "text_winnow_fingerprint" -> ((s, d) =>
-      winnowFingerprint(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", k = 8, w = 4)
-        .select("doc_id", "doc_fp", "n_fps")
-        .orderBy("doc_id")),
-
-    "text_tfidf_top" -> ((s, d) =>
-      tfIdfTop(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text", k = 3)
-        .orderBy("doc_id", "rank")),
-
-    // ranked retrieval: top-20 docs for a 3-term query, Okapi BM25
-    "text_bm25_search" -> ((s, d) =>
-      bm25Search(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text",
-        queryTerms = Seq("spark", "merge", "window"), topK = 20)),
-
-    // context-window packing: docs laid end-to-end per shard (doc_id % 8),
-    // 2048-token windows; each doc reports its pack and offset
-    "text_pack_sequences" -> ((s, d) => {
-      val t = tokenCount(Tables.documents(s, d).select("doc_id", "text"), "text")
-        .withColumn("shard", pmod(col("doc_id"), lit(8L)))
-        .select("doc_id", "shard", "ws_tokens")
-      packSequences(t, idCol = "doc_id", shardCol = "shard",
-        tokensCol = "ws_tokens", budget = 2048L)
-        .select("doc_id", "shard", "ws_tokens", "pack_id", "pack_offset")
-        .orderBy("doc_id")
-    }),
-
-    // packing denominated in TRUE tokenizer tokens: the learned-merge
-    // encode feeds the same shard-local prefix-sum packer, so window
-    // budgets mean what the training job thinks they mean
-    "text_pack_bpe" -> ((s, d) => {
-      val perDoc = bpeEncode(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", mergesFor(s, d))
-        .withColumn("shard", pmod(col("doc_id"), lit(8L)))
-        .select("doc_id", "shard", "bpe_tokens")
-      packSequences(perDoc, idCol = "doc_id", shardCol = "shard",
-        tokensCol = "bpe_tokens", budget = 2048L)
-        .select("doc_id", "shard", "bpe_tokens", "pack_id", "pack_offset")
-        .orderBy("doc_id")
-    }),
-
-    // the corpus curator's first query: per (lang, source) composition
-    "corpus_report" -> ((s, d) =>
-      corpusReport(Tables.documents(s, d).select("doc_id", "text", "source"),
-        "text", "source", minTokens = 20L)
-        .orderBy("lang_pred", "source")),
-
-    // deterministic 50-per-language sample by md5 rank
-    "sample_stratified" -> ((s, d) =>
-      sampleStratified(Tables.documents(s, d).select("doc_id", "lang", "source"),
-        stratumCol = "lang", idCol = "doc_id", k = 50)
-        .orderBy("doc_id")),
-
-    // span-level duplication gate: share of each doc's winnow fingerprints
-    // that recur elsewhere in the corpus
-    "text_dup_spans" -> ((s, d) =>
-      dupSpanFraction(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", k = 8, w = 4)
-        .orderBy("doc_id")),
-
-    // span-level decontamination: share of each corpus doc's winnow
-    // fingerprints colliding with the benchmark set (doc_id < 20)
-    "decon_spans" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      spanContamination(docs.filter(col("doc_id") >= 20),
-        docs.filter(col("doc_id") < 20), "doc_id", "text", k = 8, w = 4)
-        .orderBy("doc_id")
-    }),
-
-    // stable 80/10/10 train/val/test assignment by content-hash draw
-    "sample_hash_split" -> ((s, d) =>
-      hashSplit(Tables.documents(s, d).select("doc_id", "source"), "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .orderBy("doc_id")),
-
-    // lexical diversity: TTR + Simpson over the per-doc token table
-    "text_diversity" -> ((s, d) =>
-      tokenDiversity(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // trim the quality tails: keep the p5-p95 band of quality_score
-    "text_quality_band" -> ((s, d) =>
-      qualityBand(
-        quality(Tables.documents(s, d).select("doc_id", "text"), "text")
-          .select("doc_id", "quality_score"),
-        scoreCol = "quality_score", lo = 0.05, hi = 0.95)
-        .select("doc_id", "quality_score", "pr")
-        .orderBy("doc_id")),
-
-    // The corpus-prep pipeline composed: PII mask -> token-count gate ->
-    // language gate -> exact dedup (keep-first) -> fingerprint. One
-    // declarative plan; projections fuse, the only shuffle is the dedup
-    // group-by. This is the shape of a real pre-training data pass.
-    "text_pipeline_e2e" -> ((s, d) => {
-      // Gates run on the RAW text, the mask on the survivors: ws_tokens
-      // and lang_pred are invariant under the PII mask (the replacements
-      // are token-internal — whitespace is never created or destroyed, and
-      // a token carrying '<EMAIL>'/'<NUM>' can never equal a stopword), so
-      // gating first is the same pipeline with the expensive mask regexes
-      // run on the ~9% of docs that pass instead of the whole corpus.
-      // (Also ws-count only — tokenCount's second (BPE-regex) count is the
-      // most expensive projection in that operator and nothing downstream
-      // reads it; a gate should compute exactly what it filters on.)
-      val counted = Tables.documents(s, d).select("doc_id", "text")
-        .withColumn("ws_tokens", size(tokens(col("text"))).cast("bigint"))
-      val gated = piiMask(
-        langId(counted, "text")
-          .filter(col("ws_tokens") >= 20 && col("lang_pred") === "en"),
-        "text", "clean")
-      // keep-first per content hash via a window, not groupBy+self-join:
-      // one pass (the upstream mask/gate branch would otherwise be
-      // recomputed on both sides of the join), one shuffle on the hash
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(md5(col("clean"))).orderBy(col("doc_id"))
-      gated.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-        .select(col("doc_id"), fingerprintCol(col("clean")).as("fp"),
-          col("ws_tokens").as("n_tokens"))
-        .orderBy("doc_id")
-    })
-  )
-
   private val enIn = stopEn.map(w => s"'$w'").mkString(", ")
   private val esIn = stopEs.map(w => s"'$w'").mkString(", ")
   private val frIn = stopFr.map(w => s"'$w'").mkString(", ")
@@ -2050,40 +1613,55 @@ object TextOps {
       s"((strpos('0123456789abcdef', substr(md5($inner), $j, 1)) - 1)::BIGINT * ${1L << (4 * (8 - j))})")
       .mkString("(", " + ", ")")
 
-  /** See the `oracles` assembly at the end of this map for the
-    * composed-audit entries (text_langid_eval wraps text_langid). */
-  private val oraclesBase: Map[String, String] = Map(
-    // literal-table replay: the engine must REACH the repaired literal
-    // through the real round-trip; the oracle only restates the table
-    "text_fix_mojibake" -> {
-      def sq(s: String) = s.replace("'", "''")
-      val n = mojiVariants.length
-      val rawCase = mojiVariants.zipWithIndex
-        .map { case ((r, _, _), i) => s"WHEN $i THEN '${sq(r)}'" }.mkString(" ")
-      val fixCase = mojiVariants.zipWithIndex
-        .map { case ((_, f, _), i) => s"WHEN $i THEN '${sq(f)}'" }.mkString(" ")
-      val rndCase = mojiVariants.zipWithIndex
-        .map { case ((_, _, k), i) => s"WHEN $i THEN $k" }.mkString(" ")
-      s"SELECT doc_id, 'Doc ' || CAST(doc_id AS VARCHAR) || ': ' || (CASE doc_id % $n $rawCase END) AS raw, " +
-        s"'Doc ' || CAST(doc_id AS VARCHAR) || ': ' || (CASE doc_id % $n $fixCase END) AS fixed, " +
-        s"CAST(CASE doc_id % $n $rndCase END AS INTEGER) AS rounds " +
-        "FROM documents ORDER BY doc_id"
+  val queries: Seq[Query] = Seq(
+    Query("text_tokencount", corpusGrain = true, Some(
+      raw"""SELECT doc_id, len(string_split_regex(trim(text), '\s+'))::BIGINT AS ws_tokens, len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]'))::BIGINT AS re_tokens FROM documents ORDER BY doc_id""")) { (s, d) =>
+      tokenCount(Tables.documents(s, d).select("doc_id", "text"), "text")
+        .select("doc_id", "ws_tokens", "re_tokens")
+        .orderBy("doc_id")
     },
-    "text_tokencount" ->
-      raw"""SELECT doc_id, len(string_split_regex(trim(text), '\s+'))::BIGINT AS ws_tokens, len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]'))::BIGINT AS re_tokens FROM documents ORDER BY doc_id""",
-    "text_quality" -> {
+
+    Query("text_quality", corpusGrain = true, Some {
       val alphaR = Stable.sqlRatioRounded("alpha", "ln", 4)
       val punctR = Stable.sqlRatioRounded("punct", "ln", 4)
       val stopR = Stable.sqlRatioRounded("stops", "ntok", 4)
       raw"""WITH c AS (SELECT doc_id, length(text) AS ln, length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha, length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS punct, len(string_split_regex(trim(text), '\s+')) AS ntok, len(list_filter(string_split_regex(trim(text), '\s+'), t -> t IN ($enIn))) AS stops FROM documents) SELECT doc_id, ln::BIGINT AS n_chars_m, ntok::BIGINT AS n_tokens, $alphaR AS alpha_ratio, $punctR AS punct_ratio, $stopR AS stop_ratio, round($alphaR - $punctR + least($stopR * 2, 0.5), 4) AS quality_score FROM c ORDER BY doc_id"""
+    }) { (s, d) =>
+      quality(Tables.documents(s, d).select("doc_id", "text"), "text")
+        .select("doc_id", "n_chars_m", "n_tokens", "alpha_ratio", "punct_ratio",
+          "stop_ratio", "quality_score")
+        .orderBy("doc_id")
     },
-    // identical feature CTEs + the identical left-to-right IEEE fold of
+
+    // classifier-gate filtering: fixed-weight linear head over the
+    // quality features, thresholded on the logit (theta = 1.7, ~the corpus median)
+    Query("text_classifier_gate", corpusGrain = true, Some {
+      val alphaR = Stable.sqlRatioRounded("alpha", "ln", 4)
+      val punctR = Stable.sqlRatioRounded("punct", "ln", 4)
+      val stopR = Stable.sqlRatioRounded("stops", "ntok", 4)
+      raw"""WITH c AS (SELECT doc_id, length(text) AS ln, length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha, length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS punct, len(string_split_regex(trim(text), '\s+')) AS ntok, len(list_filter(string_split_regex(trim(text), '\s+'), t -> t IN ($enIn))) AS stops FROM documents), lg AS (SELECT doc_id, (-0.5) + 2.0 * $alphaR + (-3.0) * $punctR + 1.5 * $stopR + 0.8 * least(ntok / 100.0, 1.0) AS logit FROM c) SELECT doc_id, logit FROM lg WHERE logit >= 1.7 ORDER BY doc_id"""
+    }) { (s, d) =>
+      classifierFilter(Tables.documents(s, d).select("doc_id", "text"),
+        "doc_id", "text",
+        wAlpha = 2.0, wPunct = -3.0, wStop = 1.5, wLen = 0.8,
+        intercept = -0.5, theta = 1.7)
+        .orderBy("doc_id")
+    },
+
+    // TRAIN the filter in-engine: ridge-logistic fit (2 Newton steps on
+    // exact integer sums) DISTILLING the fixed-weight gate — y is the
+    // committed text_classifier_gate decision, the student sees only
+    // the punct-ratio + capped-length features (the cheap subset), and
+    // train_acc reports how much of the hand gate the learned filter
+    // reproduces. The DCLM/fastText "train the classifier in the
+    // pipeline" story without leaving the engine.
+    // oracle: identical feature CTEs + the identical left-to-right IEEE fold of
     // the linear head; the unrounded logit matches BITWISE (shared fold,
     // SURVEY §6), so no rounding detour is needed
     // the logit-train replay: identical integer feature quanta, exact
     // HUGEINT normal-equation sums, and the VERBATIM Cramer double tree
     // (generated by the same local builder shape as the Scala solve)
-    "text_classifier_train" -> {
+    Query("text_classifier_train", corpusGrain = false, Some {
       def m2(p: String, q: String, r: String, z: String) =
         s"($p * $q - $r * $z)"
       // Cramer over names a00..a22 / g0..g2 — mirrors logitTrain.solve
@@ -2123,13 +1701,40 @@ object TextOps {
         s"""bb2 AS (SELECT n, n_pos, b0 + ${ds(0)} AS c0, b1 + ${ds(1)} AS c1, b2 + ${ds(2)} AS c2 FROM i2), """ +
         s"""ht AS (SELECT bb2.n, bb2.n_pos, bb2.c0, bb2.c1, bb2.c2, sum(CASE WHEN (CASE WHEN floor(${tOf("c")} * 1000000.0) > 0 THEN 1 ELSE 0 END) = f.y THEN 1 ELSE 0 END) AS nh FROM f CROSS JOIN bb2 GROUP BY bb2.n, bb2.n_pos, bb2.c0, bb2.c1, bb2.c2) """ +
         s"""SELECT n::BIGINT AS n, n_pos::BIGINT AS n_pos, round(c0, 4) AS b0, round(c1, 4) AS b1, round(c2, 4) AS b2, ${graft.operators.Stable.sqlRatioRounded("nh", "n", 4)} AS train_acc FROM ht"""
+    }) { (s, d) =>
+      val doc = Tables.documents(s, d)
+      val t = col("text")
+      val toks = tokens(t)
+      val feats0 = doc.select(
+        greatest(length(t), lit(1)).cast("long").as("ln"),
+        length(regexp_replace(t, "[^a-zA-Z]", "")).cast("long").as("alpha"),
+        length(regexp_replace(t, "[a-zA-Z0-9\\s]", "")).cast("long").as("punct"),
+        greatest(size(toks), lit(1)).cast("long").as("ntok"),
+        hitCount(toks, stopEn).cast("long").as("stops"))
+      // teacher = the gate's exact logit expression (same rounded
+      // ratios); student features are 1e4-scaled integers
+      val teacher = lit(-0.5) +
+        lit(2.0) * Stable.ratioRounded(col("alpha"), col("ln"), 4) +
+        lit(-3.0) * Stable.ratioRounded(col("punct"), col("ln"), 4) +
+        lit(1.5) * Stable.ratioRounded(col("stops"), col("ntok"), 4) +
+        lit(0.8) * least(col("ntok").cast("double") / 100.0, lit(1.0))
+      val feats = feats0.select(
+        (teacher >= 1.7).cast("long").as("y"),
+        expr("(20000 * punct + ln) div (2 * ln)").as("x1"),
+        (least(col("ntok"), lit(100L)) * 100L).as("x2"))
+      logitTrain(feats, col("y"), col("x1"), col("x2"))
     },
 
-    // the k-feature replay: the SAME generated Gauss-elimination step
+    // the k-feature widening (r15): same distilled-gate teacher, but
+    // the student sees the FULL fastText-class feature set — alpha /
+    // punct / stopword / digit ratios + capped length, 5 features +
+    // intercept solved by generated Gauss elimination (the 3×3 Cramer
+    // ceiling removed); same bit-reproducible two-step IRLS contract
+    // oracle: the k-feature replay: the SAME generated Gauss-elimination step
     // texts the Scala side evaluates (trainKSolve1/2 — verbatim double
     // tree by construction), chained as one-row CTE layers; sums are
     // exact HUGEINT, features identical integer quanta
-    "text_classifier_train_k" -> {
+    Query("text_classifier_train_k", corpusGrain = false, Some {
       val k = 5
       val m = k + 1
       def fv(i: Int) = if (i == 0) "10000" else s"x$i"
@@ -2156,17 +1761,39 @@ object TextOps {
         s"""$ctes2, bb2 AS (SELECT n, n_pos, ${(0 until m).map(i => s"b$i + d$i AS b$i").mkString(", ")} FROM $last2), """ +
         s"""ht AS (SELECT bb2.n, bb2.n_pos, $bCols, sum(CASE WHEN (CASE WHEN CAST(floor($tS * 1000000.0) AS BIGINT) > 0 THEN 1 ELSE 0 END) = f.y THEN 1 ELSE 0 END) AS nh FROM f CROSS JOIN bb2 GROUP BY bb2.n, bb2.n_pos, $bCols) """ +
         s"""SELECT n::BIGINT AS n, n_pos::BIGINT AS n_pos, ${(0 until m).map(i => s"round(b$i, 4) AS b$i").mkString(", ")}, ${graft.operators.Stable.sqlRatioRounded("nh", "n", 4)} AS train_acc FROM ht"""
+    }) { (s, d) =>
+      val doc = Tables.documents(s, d)
+      val t = col("text")
+      val toks = tokens(t)
+      val feats0 = doc.select(
+        greatest(length(t), lit(1)).cast("long").as("ln"),
+        length(regexp_replace(t, "[^a-zA-Z]", "")).cast("long").as("alpha"),
+        length(regexp_replace(t, "[a-zA-Z0-9\\s]", "")).cast("long").as("punct"),
+        length(regexp_replace(t, "[^0-9]", "")).cast("long").as("digits"),
+        greatest(size(toks), lit(1)).cast("long").as("ntok"),
+        hitCount(toks, stopEn).cast("long").as("stops"))
+      val teacher = lit(-0.5) +
+        lit(2.0) * Stable.ratioRounded(col("alpha"), col("ln"), 4) +
+        lit(-3.0) * Stable.ratioRounded(col("punct"), col("ln"), 4) +
+        lit(1.5) * Stable.ratioRounded(col("stops"), col("ntok"), 4) +
+        lit(0.8) * least(col("ntok").cast("double") / 100.0, lit(1.0))
+      val feats = feats0.select(
+        (teacher >= 1.7).cast("long").as("y"),
+        expr("(20000 * alpha + ln) div (2 * ln)").as("x1"),
+        expr("(20000 * punct + ln) div (2 * ln)").as("x2"),
+        expr("(20000 * stops + ntok) div (2 * ntok)").as("x3"),
+        (least(col("ntok"), lit(100L)) * 100L).as("x4"),
+        expr("(20000 * digits + ln) div (2 * ln)").as("x5"))
+      logitTrainK(feats, col("y"),
+        Seq(col("x1"), col("x2"), col("x3"), col("x4"), col("x5")))
     },
 
-    "text_classifier_gate" -> {
-      val alphaR = Stable.sqlRatioRounded("alpha", "ln", 4)
-      val punctR = Stable.sqlRatioRounded("punct", "ln", 4)
-      val stopR = Stable.sqlRatioRounded("stops", "ntok", 4)
-      raw"""WITH c AS (SELECT doc_id, length(text) AS ln, length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha, length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS punct, len(string_split_regex(trim(text), '\s+')) AS ntok, len(list_filter(string_split_regex(trim(text), '\s+'), t -> t IN ($enIn))) AS stops FROM documents), lg AS (SELECT doc_id, (-0.5) + 2.0 * $alphaR + (-3.0) * $punctR + 1.5 * $stopR + 0.8 * least(ntok / 100.0, 1.0) AS logit FROM c) SELECT doc_id, logit FROM lg WHERE logit >= 1.7 ORDER BY doc_id"""
-    },
-    // the gate's logit CTEs + fixed-threshold bands + a literal epoch
+    // 3-epoch anneal: epoch 1 sees everything, epoch 3 keeps 10% low /
+    // 50% mid / all high — band thresholds fixed at the corpus logit
+    // terciles (1.55 / 1.8), corpus-independent by contract
+    // oracle: the gate's logit CTEs + fixed-threshold bands + a literal epoch
     // schedule; inclusion replays the (doc_id:epoch) md5 draw
-    "mix_anneal" -> {
+    Query("mix_anneal", corpusGrain = true, Some {
       val alphaR = Stable.sqlRatioRounded("alpha", "ln", 4)
       val punctR = Stable.sqlRatioRounded("punct", "ln", 4)
       val stopR = Stable.sqlRatioRounded("stops", "ntok", 4)
@@ -2174,83 +1801,231 @@ object TextOps {
         s"((strpos('0123456789abcdef', substr(md5(b.doc_id::VARCHAR || ':' || ep.epoch::VARCHAR), $j, 1)) - 1)::BIGINT * ${1L << (4 * (4 - j))})")
         .mkString("(", " + ", ")")
       raw"""WITH c AS (SELECT doc_id, length(text) AS ln, length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha, length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS punct, len(string_split_regex(trim(text), '\s+')) AS ntok, len(list_filter(string_split_regex(trim(text), '\s+'), t -> t IN ($enIn))) AS stops FROM documents), lg AS (SELECT doc_id, (-0.5) + 2.0 * $alphaR + (-3.0) * $punctR + 1.5 * $stopR + 0.8 * least(ntok / 100.0, 1.0) AS logit FROM c), b AS (SELECT doc_id, logit, CASE WHEN logit >= 1.8 THEN 'high' WHEN logit >= 1.55 THEN 'mid' ELSE 'low' END AS band FROM lg), ep(epoch, r_low, r_mid, r_high) AS (VALUES (1, 1.0, 1.0, 1.0), (2, 0.5, 1.0, 1.0), (3, 0.1, 0.5, 1.0)) SELECT b.doc_id, ep.epoch::BIGINT AS epoch, b.band, b.logit FROM b CROSS JOIN ep WHERE $draw < (CASE WHEN b.band = 'high' THEN ep.r_high WHEN b.band = 'mid' THEN ep.r_mid ELSE ep.r_low END) * 65536 ORDER BY doc_id, epoch"""
+    }) { (s, d) =>
+      mixAnneal(Tables.documents(s, d).select("doc_id", "text"),
+        "doc_id", "text",
+        wAlpha = 2.0, wPunct = -3.0, wStop = 1.5, wLen = 0.8,
+        intercept = -0.5, bandLo = 1.55, bandHi = 1.8,
+        schedule = Seq((1L, 1.0, 1.0, 1.0), (2L, 0.5, 1.0, 1.0),
+          (3L, 0.1, 0.5, 1.0)))
+        .orderBy("doc_id", "epoch")
     },
-    // tokens via the nonempty-runs contract (list_filter) to match
+
+    // oracle: tokens via the nonempty-runs contract (list_filter) to match
     // WordNgrams; range(1, len(t)) builds the 2-gram list, range(1,
     // len(t) - 1) the 3-gram list — both empty when the doc is too short
-    "text_repetition" -> {
+    Query("text_repetition", corpusGrain = true, Some {
       val d2 = Stable.sqlRatioRounded("tot2 - d2", "tot2", 4)
       val d3 = Stable.sqlRatioRounded("tot3 - d3", "tot3", 4)
       raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), t -> t != '') AS t FROM documents), g AS (SELECT doc_id, len(t)::BIGINT AS n_tokens, greatest(len(t) - 1, 0) AS tot2, len(list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS d2, greatest(len(t) - 2, 0) AS tot3, len(list_distinct(list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS d3 FROM tk) SELECT doc_id, n_tokens, CASE WHEN tot2 = 0 THEN 0.0 ELSE $d2 END AS dup_2gram_frac, CASE WHEN tot3 = 0 THEN 0.0 ELSE $d3 END AS dup_3gram_frac FROM g ORDER BY doc_id"""
+    }) { (s, d) =>
+      repetition(Tables.documents(s, d).select("doc_id", "text"), "text")
+        .select("doc_id", "n_tokens", "dup_2gram_frac", "dup_3gram_frac")
+        .orderBy("doc_id")
     },
-    // same vocabulary-collapse: word counts once, pairs over DISTINCT words
-    "text_bpe_pairs" ->
-      raw"""WITH wds AS (SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t != '')) AS w FROM documents), wc AS (SELECT w, count(*) AS wn FROM wds GROUP BY w), p AS (SELECT wn, unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair FROM wc WHERE length(w) >= 2) SELECT pair, sum(wn)::BIGINT AS pair_count FROM p GROUP BY pair ORDER BY pair_count DESC, pair ASC LIMIT 256""",
-    // the merge loop replayed as k unrolled CTE rounds: each round's
+
+    // BPE pair statistics over the corpus vocabulary (top 256 pairs)
+    // oracle: same vocabulary-collapse: word counts once, pairs over DISTINCT words
+    Query("text_bpe_pairs", corpusGrain = false, Some(
+      raw"""WITH wds AS (SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t != '')) AS w FROM documents), wc AS (SELECT w, count(*) AS wn FROM wds GROUP BY w), p AS (SELECT wn, unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair FROM wc WHERE length(w) >= 2) SELECT pair, sum(wn)::BIGINT AS pair_count FROM p GROUP BY pair ORDER BY pair_count DESC, pair ASC LIMIT 256""")) { (s, d) =>
+      bpePairCounts(Tables.documents(s, d).select("text"), "text", topK = 256)
+    },
+
+    // the merge LOOP on top: k greedy merges over the vocabulary table
+    // oracle: the merge loop replayed as k unrolled CTE rounds: each round's
     // argmax (m_i) + greedy delimited-string replace (g_i) — the same
     // " x y " -> " xy " application the Spark loop does
-    "text_bpe_merges" -> bpeMergesOracle(bpeMergeK),
-    // byte-identical trainer semantics — the same oracle verbatim
-    "text_bpe_merges_local" -> bpeMergesOracle(bpeMergeK),
-    // the merge rounds replayed with the original word carried through,
+    Query("text_bpe_merges", corpusGrain = false, Some(bpeMergesOracle(bpeMergeK))) { (s, d) =>
+      bpeMerges(Tables.documents(s, d).select("text"), "text", k = bpeMergeK)
+        .orderBy("merge_rank")
+    },
+
+    // the PRODUCTION trainer: vocabulary pulled to one node once, the
+    // k merges sequenced locally — same table as text_bpe_merges (same
+    // oracle verbatim), without k sequential Spark jobs
+    // oracle: byte-identical trainer semantics — the same oracle verbatim
+    Query("text_bpe_merges_local", corpusGrain = false, Some(bpeMergesOracle(bpeMergeK))) { (s, d) =>
+      bpeMergesLocal(Tables.documents(s, d).select("text"), "text", k = bpeMergeK)
+        .orderBy("merge_rank")
+    },
+
+    // ENCODE with the learned merges: true tokenizer token counts per
+    // doc. The merge table is a session artifact (trained once, like the
+    // ANN indexes); text_bpe_merges above stays deliberately raw-priced.
+    // oracle: the merge rounds replayed with the original word carried through,
     // then the (doc, word)-grain map onto the encoded vocabulary
-    "text_bpe_encode" ->
-      s"""WITH ${bpePerDocCtes(bpeMergeK)} SELECT doc_id, n_words, bpe_tokens FROM bpd ORDER BY doc_id""",
-    // CANONICAL BPE against the PUBLIC GPT-2 excerpt: the published
+    Query("text_bpe_encode", corpusGrain = true, Some(
+      s"""WITH ${bpePerDocCtes(bpeMergeK)} SELECT doc_id, n_words, bpe_tokens FROM bpd ORDER BY doc_id""")) { (s, d) =>
+      bpeEncode(Tables.documents(s, d).select("doc_id", "text"),
+        "doc_id", "text", mergesFor(s, d))
+        .orderBy("doc_id")
+    },
+
+    // CANONICAL-semantics encode against the PUBLIC GPT-2 merge excerpt:
+    // the oracle replays the published one-merge-at-a-time lowest-rank-
+    // leftmost loop as a recursive CTE over the same external table, so
+    // the engine's textbook mode is checked against the ecosystem's
+    // algorithm, not against its own trainer
+    // oracle: CANONICAL BPE against the PUBLIC GPT-2 excerpt: the published
     // one-merge-at-a-time lowest-rank-leftmost loop as a recursive CTE
     // (equivalent to the per-rank sweep — a merge-created pair always
     // ranks later than the merge that created it); words carry GPT-2's
     // Ġ leading-space marker exactly as the published tokenizer sees
     // space-preceded words
-    "text_bpe_encode_textbook" ->
-      raw"""WITH RECURSIVE m(r, x, y) AS (SELECT * FROM (VALUES (1, 'Ġ', 't'), (2, 'Ġ', 'a'), (3, 'h', 'e'), (4, 'i', 'n'), (5, 'r', 'e'), (6, 'o', 'n'), (7, 'Ġt', 'he'), (8, 'e', 'r')) v(r, x, y)), wds AS (SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t != '')) AS w FROM documents), wc AS (SELECT w, count(*)::BIGINT AS wn FROM wds GROUP BY w), w0 AS (SELECT w, ' ' || regexp_replace('Ġ' || w, '(.)', '\1 ', 'g') AS repr, 0 AS step FROM wc), rec AS (SELECT w, repr, step FROM w0 UNION ALL SELECT w, substr(repr, 1, p - 1) || ' ' || x || y || ' ' || substr(repr, p + 3 + length(x) + length(y)), step + 1 FROM (SELECT r0.w AS w, r0.repr AS repr, r0.step AS step, min_by(m.x, m.r) AS x, min_by(m.y, m.r) AS y, strpos(r0.repr, ' ' || min_by(m.x, m.r) || ' ' || min_by(m.y, m.r) || ' ') AS p FROM rec r0 JOIN m ON strpos(r0.repr, ' ' || m.x || ' ' || m.y || ' ') > 0 GROUP BY r0.w, r0.repr, r0.step)), fin AS (SELECT w, repr AS bpe_repr FROM (SELECT *, row_number() OVER (PARTITION BY w ORDER BY step DESC) rn FROM rec) WHERE rn = 1) SELECT wc.w, wc.wn, f.bpe_repr, (length(f.bpe_repr) - length(replace(f.bpe_repr, ' ', '')) - 1)::BIGINT AS n_bpe FROM fin f JOIN wc ON wc.w = f.w ORDER BY wc.w""",
-    // the bpe per-doc counts through the same shard-local prefix-sum
-    // packer as text_pack_sequences
-    "text_pack_bpe" ->
-      s"""WITH ${bpePerDocCtes(bpeMergeK)}, pt AS (SELECT doc_id, doc_id % 8 AS shard, bpe_tokens FROM bpd), pc AS (SELECT doc_id, shard, bpe_tokens, sum(bpe_tokens) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - bpe_tokens AS cum FROM pt) SELECT doc_id, shard, bpe_tokens, (cum // 2048)::BIGINT AS pack_id, (cum % 2048)::BIGINT AS pack_offset FROM pc ORDER BY doc_id""",
-    // identical wrap template + the same three regex stages, entity
+    Query("text_bpe_encode_textbook", corpusGrain = false, Some(
+      raw"""WITH RECURSIVE m(r, x, y) AS (SELECT * FROM (VALUES (1, 'Ġ', 't'), (2, 'Ġ', 'a'), (3, 'h', 'e'), (4, 'i', 'n'), (5, 'r', 'e'), (6, 'o', 'n'), (7, 'Ġt', 'he'), (8, 'e', 'r')) v(r, x, y)), wds AS (SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t != '')) AS w FROM documents), wc AS (SELECT w, count(*)::BIGINT AS wn FROM wds GROUP BY w), w0 AS (SELECT w, ' ' || regexp_replace('Ġ' || w, '(.)', '\1 ', 'g') AS repr, 0 AS step FROM wc), rec AS (SELECT w, repr, step FROM w0 UNION ALL SELECT w, substr(repr, 1, p - 1) || ' ' || x || y || ' ' || substr(repr, p + 3 + length(x) + length(y)), step + 1 FROM (SELECT r0.w AS w, r0.repr AS repr, r0.step AS step, min_by(m.x, m.r) AS x, min_by(m.y, m.r) AS y, strpos(r0.repr, ' ' || min_by(m.x, m.r) || ' ' || min_by(m.y, m.r) || ' ') AS p FROM rec r0 JOIN m ON strpos(r0.repr, ' ' || m.x || ' ' || m.y || ' ') > 0 GROUP BY r0.w, r0.repr, r0.step)), fin AS (SELECT w, repr AS bpe_repr FROM (SELECT *, row_number() OVER (PARTITION BY w ORDER BY step DESC) rn FROM rec) WHERE rn = 1) SELECT wc.w, wc.wn, f.bpe_repr, (length(f.bpe_repr) - length(replace(f.bpe_repr, ' ', '')) - 1)::BIGINT AS n_bpe FROM fin f JOIN wc ON wc.w = f.w ORDER BY wc.w""")) { (s, d) =>
+      bpeEncodeWordsTextbook(Tables.documents(s, d).select("text"), "text",
+        gpt2MergesExcerpt)
+        .orderBy("w")
+    },
+
+    // crawl ingest: a deterministic HTML wrapping of each doc (nav bar,
+    // script, styles, entity-bearing footer) pushed through the
+    // tag-strip + line-density extractor — body prose survives,
+    // boilerplate lines drop
+    // oracle: identical wrap template + the same three regex stages, entity
     // decode order (&amp; last) and line-density keep in DuckDB
-    "text_html_extract" ->
-      s"""WITH $htmlOracleCtes SELECT doc_id, array_to_string(kept, chr(10)) AS main_text, len(kept)::BIGINT AS n_kept, len(lines)::BIGINT AS n_lines FROM k ORDER BY doc_id""",
-    // the extract chain feeding the quality formula (identical Stable
+    Query("text_html_extract", corpusGrain = true, Some(
+      s"""WITH $htmlOracleCtes SELECT doc_id, array_to_string(kept, chr(10)) AS main_text, len(kept)::BIGINT AS n_kept, len(lines)::BIGINT AS n_lines FROM k ORDER BY doc_id""")) { (s, d) =>
+      htmlExtract(htmlWrapped(Tables.documents(s, d).select("doc_id", "text")),
+        "doc_id", "html")
+        .orderBy("doc_id")
+    },
+
+    // the crawl-to-corpus story END-TO-END in one plan: wrap → extract →
+    // quality-score the EXTRACTED text → gate → exact-dedup the
+    // survivors (reps carry their copy count) — extraction feeding the
+    // existing quality/dedup chain, not standing beside it
+    // oracle: the extract chain feeding the quality formula (identical Stable
     // ratio arithmetic over the EXTRACTED text) and an exact-dedup rep
     // selection of the gate survivors
-    "text_html_pipeline" -> {
+    Query("text_html_pipeline", corpusGrain = true, Some {
       val alphaR = Stable.sqlRatioRounded("alpha", "ln", 4)
       val punctR = Stable.sqlRatioRounded("punct", "ln", 4)
       val stopR = Stable.sqlRatioRounded("stops", "ntok", 4)
       raw"""WITH $htmlOracleCtes, x AS (SELECT doc_id, array_to_string(kept, chr(10)) AS text FROM k), c AS (SELECT doc_id, text, length(text) AS ln, length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha, length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS punct, len(string_split_regex(trim(text), '\s+')) AS ntok, len(list_filter(string_split_regex(trim(text), '\s+'), t -> t IN ($enIn))) AS stops FROM x), q AS (SELECT doc_id, text, round($alphaR - $punctR + least($stopR * 2, 0.5), 4) AS quality_score FROM c), g AS (SELECT doc_id, text, quality_score FROM q WHERE quality_score >= 0.9) SELECT min(doc_id)::BIGINT AS doc_id, min(quality_score) AS quality_score, count(*) AS n_dupes FROM g GROUP BY text ORDER BY doc_id"""
+    }) { (s, d) =>
+      val ext = htmlExtract(
+        htmlWrapped(Tables.documents(s, d).select("doc_id", "text")),
+        "doc_id", "html")
+      val scored = quality(ext.select(col("doc_id"), col("main_text")), "main_text")
+      scored.filter(col("quality_score") >= 0.9)
+        .groupBy(col("main_text"))
+        .agg(min(struct(col("doc_id"), col("quality_score"))).as("_f"),
+          count(lit(1)).as("n_dupes"))
+        .select(col("_f.doc_id").as("doc_id"),
+          col("_f.quality_score").as("quality_score"), col("n_dupes"))
+        .orderBy("doc_id")
     },
 
-    "text_oov_rate" -> {
+    // OOV rate per doc vs the corpus's own top-1000 terms
+    Query("text_oov_rate", corpusGrain = true, Some {
       val rate = Stable.sqlRatioRounded(
         "sum(CASE WHEN inv THEN 0 ELSE 1 END)", "count(*)", 4)
       raw"""WITH tk AS (SELECT doc_id, unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t != '')) AS term FROM documents), v AS (SELECT term FROM (SELECT term, count(*) AS tf FROM tk GROUP BY term ORDER BY tf DESC, term ASC LIMIT 1000)), j AS (SELECT t.doc_id, (v.term IS NOT NULL) AS inv FROM tk t LEFT JOIN v ON t.term = v.term) SELECT doc_id, count(*)::BIGINT AS n_tokens, sum(CASE WHEN inv THEN 0 ELSE 1 END)::BIGINT AS n_oov, $rate AS oov_rate FROM j GROUP BY doc_id ORDER BY doc_id"""
+    }) { (s, d) =>
+      oovRate(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text",
+        vocabK = 1000)
+        .orderBy("doc_id")
     },
-    "text_ngram_counts" ->
-      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), t -> t != '') AS t FROM documents), gs AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g FROM tk WHERE len(t) >= 2) SELECT g2 AS gram, count(*) AS doc_freq FROM (SELECT unnest(g) AS g2 FROM gs) GROUP BY gram ORDER BY doc_freq DESC, gram ASC LIMIT 100""",
-    // chunk i covers tokens [i*12+1, i*12+16] (1-based inclusive slices in
+
+    Query("text_ngram_counts", corpusGrain = false, Some(
+      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), t -> t != '') AS t FROM documents), gs AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g FROM tk WHERE len(t) >= 2) SELECT g2 AS gram, count(*) AS doc_freq FROM (SELECT unnest(g) AS g2 FROM gs) GROUP BY gram ORDER BY doc_freq DESC, gram ASC LIMIT 100""")) { (s, d) =>
+      ngramCounts(Tables.documents(s, d).select("text"), "text", n = 2, topK = 100)
+    },
+
+    // oracle: chunk i covers tokens [i*12+1, i*12+16] (1-based inclusive slices in
     // both engines, truncated at the end); nc mirrors tokenChunks' formula
-    "text_chunks" ->
-      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), t -> t != '') AS t FROM documents), c AS (SELECT doc_id, t, CASE WHEN len(t) = 0 THEN 0 ELSE greatest(len(t) - 4 - 1, 0) // 12 + 1 END AS nc FROM tk), u AS (SELECT doc_id, unnest(list_transform(range(0, nc), i -> struct_pack(cid := i, sl := t[i*12+1 : i*12+16]))) AS ch FROM c) SELECT doc_id, ch.cid::BIGINT AS chunk_id, len(ch.sl)::BIGINT AS chunk_tokens, array_to_string(ch.sl, ' ') AS chunk_text FROM u ORDER BY doc_id, chunk_id""",
-    "text_langid" ->
-      raw"""WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk FROM documents), h AS (SELECT doc_id, len(list_filter(tk, x -> x IN ($enIn)))::BIGINT AS en_hits, len(list_filter(tk, x -> x IN ($esIn)))::BIGINT AS es_hits, len(list_filter(tk, x -> x IN ($frIn)))::BIGINT AS fr_hits FROM t) SELECT doc_id, en_hits, es_hits, fr_hits, CASE WHEN en_hits = 0 AND es_hits = 0 AND fr_hits = 0 THEN 'und' WHEN en_hits >= es_hits AND en_hits >= fr_hits THEN 'en' WHEN es_hits >= fr_hits THEN 'es' ELSE 'fr' END AS lang_pred FROM h ORDER BY doc_id""",
-    "text_fingerprint" ->
-      raw"""SELECT doc_id, md5(array_to_string(list_sort(list_distinct(string_split_regex(trim(lower(text)), '\s+'))), ' ')) AS fp FROM documents ORDER BY doc_id""",
-    "corpus_report" -> {
-      val alphaR = Stable.sqlRatioRounded("alpha", "ln", 4)
-      val punctR = Stable.sqlRatioRounded("punct", "ln", 4)
-      val stopR = Stable.sqlRatioRounded("stops", "ntok", 4)
-      raw"""WITH c AS (SELECT doc_id, source, length(text) AS ln, length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha, length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS punct, len(string_split_regex(trim(text), '\s+')) AS ntok, len(list_filter(string_split_regex(trim(text), '\s+'), t -> t IN ($enIn))) AS stops, string_split_regex(trim(lower(text)), '\s+') AS tk FROM documents), h AS (SELECT source, ntok, round($alphaR - $punctR + least($stopR * 2, 0.5), 4) AS q, len(list_filter(tk, x -> x IN ($enIn))) AS en_hits, len(list_filter(tk, x -> x IN ($esIn))) AS es_hits, len(list_filter(tk, x -> x IN ($frIn))) AS fr_hits FROM c), l AS (SELECT source, ntok, q, CASE WHEN en_hits = 0 AND es_hits = 0 AND fr_hits = 0 THEN 'und' WHEN en_hits >= es_hits AND en_hits >= fr_hits THEN 'en' WHEN es_hits >= fr_hits THEN 'es' ELSE 'fr' END AS lang_pred FROM h) SELECT lang_pred, source, count(*) AS n_docs, sum(ntok)::BIGINT AS total_tokens, ${Stable.sqlAvgRounded("q", 4)} AS avg_quality, (count(*) FILTER (WHERE ntok >= 20))::BIGINT AS n_gate_pass FROM l GROUP BY lang_pred, source ORDER BY lang_pred, source"""
+    Query("text_chunks", corpusGrain = true, Some(
+      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), t -> t != '') AS t FROM documents), c AS (SELECT doc_id, t, CASE WHEN len(t) = 0 THEN 0 ELSE greatest(len(t) - 4 - 1, 0) // 12 + 1 END AS nc FROM tk), u AS (SELECT doc_id, unnest(list_transform(range(0, nc), i -> struct_pack(cid := i, sl := t[i*12+1 : i*12+16]))) AS ch FROM c) SELECT doc_id, ch.cid::BIGINT AS chunk_id, len(ch.sl)::BIGINT AS chunk_tokens, array_to_string(ch.sl, ' ') AS chunk_text FROM u ORDER BY doc_id, chunk_id""")) { (s, d) =>
+      tokenChunks(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text",
+        chunkTokens = 16, overlap = 4)
+        .orderBy("doc_id", "chunk_id")
     },
-    "dedup_exact" ->
-      raw"""SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_dupes FROM documents GROUP BY md5(text) ORDER BY keep_id""",
-    "dedup_normalized" ->
-      raw"""SELECT md5(trim(regexp_replace(lower(nfc_normalize(text)), '[^a-z0-9]+', ' ', 'g'))) AS norm_hash, min(doc_id) AS keep_id, count(*) AS n_dupes, count(DISTINCT md5(text)) AS n_raw_variants FROM documents GROUP BY 1 ORDER BY keep_id""",
-    // DuckDB's own UTF8PROC-backed nfc_normalize over chr()-built
+
+    Query("text_langid", corpusGrain = true, Some(
+      raw"""WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk FROM documents), h AS (SELECT doc_id, len(list_filter(tk, x -> x IN ($enIn)))::BIGINT AS en_hits, len(list_filter(tk, x -> x IN ($esIn)))::BIGINT AS es_hits, len(list_filter(tk, x -> x IN ($frIn)))::BIGINT AS fr_hits FROM t) SELECT doc_id, en_hits, es_hits, fr_hits, CASE WHEN en_hits = 0 AND es_hits = 0 AND fr_hits = 0 THEN 'und' WHEN en_hits >= es_hits AND en_hits >= fr_hits THEN 'en' WHEN es_hits >= fr_hits THEN 'es' ELSE 'fr' END AS lang_pred FROM h ORDER BY doc_id""")) { (s, d) =>
+      langId(Tables.documents(s, d).select("doc_id", "text"), "text")
+        .select("doc_id", "en_hits", "es_hits", "fr_hits", "lang_pred")
+        .orderBy("doc_id")
+    },
+
+    // langid accuracy audit: the predictor's confusion matrix over a
+    // fixture whose text is SYNTHESIZED to match its label (r13; the
+    // r12 round honestly reported the corpus's lang column does not
+    // track its text, so the old matrix measured label noise, not the
+    // classifier). The Web-family formula-fixture contract: labels and
+    // text both derive from doc_id, the engine must reach the matrix
+    // through the real classifier, and the deterministic contamination
+    // classes put KNOWN off-diagonal cells (es→en, fr→es, und→en tie
+    // flips at doc_id%15/%20 density) on the oracle path while the
+    // diagonal stays dominant — a langid regression MOVES this matrix.
+    // Answer-sized (|langs|² cells) at any corpus size.
+    // composed audit: the fixture formula (label-aligned synthesized
+    // text, see [[synthesizeLangDocs]]) feeds the SAME langid replay the
+    // text_langid oracle states, so the audit cannot drift from the
+    // predictor it audits — and the matrix measures the CLASSIFIER, not
+    // the corpus's label noise (r13)
+    Query("text_langid_eval", corpusGrain = false, Some(
+      raw"""WITH ld AS (SELECT doc_id,
+        |  CASE doc_id % 4 WHEN 0 THEN 'en' WHEN 1 THEN 'es' WHEN 2 THEN 'fr' ELSE 'und' END AS lang,
+        |  trim(
+        |    CASE doc_id % 4
+        |      WHEN 0 THEN CASE doc_id % 3 WHEN 0 THEN 'the' WHEN 1 THEN 'the and' ELSE 'the and of' END
+        |      WHEN 1 THEN CASE doc_id % 3 WHEN 0 THEN 'el' WHEN 1 THEN 'el que' ELSE 'el que los' END
+        |      WHEN 2 THEN CASE doc_id % 3 WHEN 0 THEN 'le' WHEN 1 THEN 'le et' ELSE 'le et les' END
+        |      ELSE '' END
+        |    || ' tok' || (doc_id % 7)::VARCHAR || ' zz' || (doc_id % 11)::VARCHAR
+        |    || CASE WHEN doc_id % 5 = 0 THEN
+        |         CASE doc_id % 4 WHEN 0 THEN ' el' WHEN 1 THEN ' the' WHEN 2 THEN ' el' ELSE ' the' END
+        |       ELSE '' END) AS text
+        |  FROM documents),
+        |t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk FROM ld),
+        |h AS (SELECT doc_id, len(list_filter(tk, x -> x IN ($enIn)))::BIGINT AS en_hits, len(list_filter(tk, x -> x IN ($esIn)))::BIGINT AS es_hits, len(list_filter(tk, x -> x IN ($frIn)))::BIGINT AS fr_hits FROM t),
+        |p AS (SELECT doc_id, CASE WHEN en_hits = 0 AND es_hits = 0 AND fr_hits = 0 THEN 'und' WHEN en_hits >= es_hits AND en_hits >= fr_hits THEN 'en' WHEN es_hits >= fr_hits THEN 'es' ELSE 'fr' END AS lang_pred FROM h)
+        |SELECT d.lang, p.lang_pred, count(*) AS n FROM p JOIN ld d USING (doc_id)
+        |GROUP BY d.lang, p.lang_pred ORDER BY lang, lang_pred""".stripMargin)) { (s, d) =>
+      val fix = synthesizeLangDocs(Tables.documents(s, d), "doc_id")
+      langId(fix.select("doc_id", "text"), "text")
+        .select("doc_id", "lang_pred")
+        .join(fix.select("doc_id", "lang"), "doc_id")
+        .groupBy("lang", "lang_pred")
+        .agg(count(lit(1)).as("n"))
+        .orderBy("lang", "lang_pred")
+    },
+
+    Query("text_fingerprint", corpusGrain = true, Some(
+      raw"""SELECT doc_id, md5(array_to_string(list_sort(list_distinct(string_split_regex(trim(lower(text)), '\s+'))), ' ')) AS fp FROM documents ORDER BY doc_id""")) { (s, d) =>
+      fingerprint(Tables.documents(s, d).select("doc_id", "text"), "text")
+        .select("doc_id", "fp")
+        .orderBy("doc_id")
+    },
+
+    Query("dedup_exact", corpusGrain = true, Some(
+      raw"""SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_dupes FROM documents GROUP BY md5(text) ORDER BY keep_id""")) { (s, d) =>
+      dedupExact(Tables.documents(s, d), "doc_id", "text")
+        .select("content_hash", "keep_id", "n_dupes")
+        .orderBy("keep_id")
+    },
+
+    Query("dedup_normalized", corpusGrain = true, Some(
+      raw"""SELECT md5(trim(regexp_replace(lower(nfc_normalize(text)), '[^a-z0-9]+', ' ', 'g'))) AS norm_hash, min(doc_id) AS keep_id, count(*) AS n_dupes, count(DISTINCT md5(text)) AS n_raw_variants FROM documents GROUP BY 1 ORDER BY keep_id""")) { (s, d) =>
+      dedupNormalized(Tables.documents(s, d), "doc_id", "text")
+        .select("norm_hash", "keep_id", "n_dupes", "n_raw_variants")
+        .orderBy("keep_id")
+    },
+
+    // Unicode NFC normalization (UAX #15) over a multilingual fixture:
+    // each doc's prefix is decorated with a DECOMPOSED suffix (combining
+    // acute/diaeresis/tilde, Hangul conjoining jamo) chosen by residue;
+    // the engine composes via the native quick-check expression and the
+    // oracle replays with DuckDB's own nfc_normalize over chr()-built
+    // codepoints — two independent Unicode implementations must agree
+    // on every composed byte (md5), codepoint count, and changed flag
+    // oracle: DuckDB's own UTF8PROC-backed nfc_normalize over chr()-built
     // decomposed codepoints — an independent Unicode implementation
     // cross-checking the JDK Normalizer byte-for-byte (md5)
-    "text_nfc_normalize" ->
+    Query("text_nfc_normalize", corpusGrain = true, Some(
       raw"""WITH r AS (SELECT doc_id, substring(text, 1, 24) ||
         |  CASE doc_id % 4
         |    WHEN 0 THEN ' cafe' || chr(769)
@@ -2262,102 +2037,305 @@ object TextOps {
         |  length(nfc_normalize(raw))::BIGINT AS nfc_len,
         |  md5(nfc_normalize(raw)) AS nfc_md5,
         |  (raw <> nfc_normalize(raw))::BIGINT AS changed
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "text_collocations" -> {
+        |FROM r ORDER BY doc_id""".stripMargin)) { (s, d) =>
+      // explicit \uXXXX escapes so the fixture is decomposed BY
+      // CONSTRUCTION (a composed literal would make the query a no-op)
+      val suffix = element_at(array(
+        lit(" cafe\u0301"),        // e + COMBINING ACUTE
+        lit(" u\u0308ber"),        // u + COMBINING DIAERESIS
+        lit(" espan\u0303ol"),     // n + COMBINING TILDE
+        lit(" \u1112\u1161\u11ab\u1100\u1173\u11af")), // hangul jamo
+        (pmod(col("doc_id"), lit(4)) + 1).cast("int"))
+      Tables.documents(s, d)
+        .select(col("doc_id").cast("bigint").as("doc_id"),
+          concat(substring(col("text"), 1, 24), suffix).as("raw"))
+        .select(col("doc_id"), col("raw"),
+          graft.functions.GraftFunctions.unicodeNormalize(col("raw"), "NFC")
+            .as("nfc_text"))
+        .select(col("doc_id"),
+          length(col("raw")).cast("bigint").as("raw_len"),
+          length(col("nfc_text")).cast("bigint").as("nfc_len"),
+          md5(col("nfc_text")).as("nfc_md5"),
+          (col("raw") =!= col("nfc_text")).cast("bigint").as("changed"))
+        .orderBy("doc_id")
+    },
+
+    // mojibake repair: the native sloppy-cp1252 round-trip vs the
+    // literal table — single, double and emoji mojibake repair; clean
+    // ASCII passes through with rounds=0
+    // oracle: literal-table replay: the engine must REACH the repaired literal
+    // through the real round-trip; the oracle only restates the table
+    Query("text_fix_mojibake", corpusGrain = true, Some {
+      def sq(s: String) = s.replace("'", "''")
+      val n = mojiVariants.length
+      val rawCase = mojiVariants.zipWithIndex
+        .map { case ((r, _, _), i) => s"WHEN $i THEN '${sq(r)}'" }.mkString(" ")
+      val fixCase = mojiVariants.zipWithIndex
+        .map { case ((_, f, _), i) => s"WHEN $i THEN '${sq(f)}'" }.mkString(" ")
+      val rndCase = mojiVariants.zipWithIndex
+        .map { case ((_, _, k), i) => s"WHEN $i THEN $k" }.mkString(" ")
+      s"SELECT doc_id, 'Doc ' || CAST(doc_id AS VARCHAR) || ': ' || (CASE doc_id % $n $rawCase END) AS raw, " +
+        s"'Doc ' || CAST(doc_id AS VARCHAR) || ': ' || (CASE doc_id % $n $fixCase END) AS fixed, " +
+        s"CAST(CASE doc_id % $n $rndCase END AS INTEGER) AS rounds " +
+        "FROM documents ORDER BY doc_id"
+    }) { (s, d) =>
+      val v = pmod(col("doc_id"), lit(mojiVariants.length)).cast("int")
+      val raw = concat(lit("Doc "), col("doc_id").cast("string"), lit(": "),
+        element_at(array(mojiVariants.map(t => lit(t._1)): _*), v + 1))
+      Tables.documents(s, d)
+        .select(col("doc_id").cast("bigint").as("doc_id"), raw.as("raw"))
+        .select(col("doc_id"), col("raw"),
+          graft.functions.GraftFunctions.fixMojibake(col("raw")).as("r"))
+        .select(col("doc_id"), col("raw"),
+          col("r.fixed").as("fixed"), col("r.rounds").as("rounds"))
+        .orderBy("doc_id")
+    },
+
+    // Dice-scored adjacent-token collocations, count floor 5, top 100
+    Query("text_collocations", corpusGrain = false, Some {
       val dice = Stable.sqlRatioRounded("2 * pair_count", "c1 + c2", 4)
       raw"""WITH tk AS (SELECT list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t != '') AS t FROM documents), uc AS (SELECT w, count(*) AS c FROM (SELECT unnest(t) AS w FROM tk) GROUP BY w), bi AS (SELECT t[i-1] AS w1, t[i] AS w2 FROM (SELECT t, unnest(range(2, len(t) + 1)) AS i FROM tk WHERE len(t) >= 2)), bc AS (SELECT w1, w2, count(*) AS pair_count FROM bi GROUP BY w1, w2 HAVING count(*) >= 5), j AS (SELECT b.w1, b.w2, b.pair_count, u1.c AS c1, u2.c AS c2 FROM bc b JOIN uc u1 ON b.w1 = u1.w JOIN uc u2 ON b.w2 = u2.w) SELECT w1, w2, pair_count, $dice AS dice FROM j ORDER BY dice DESC, w1 ASC, w2 ASC LIMIT 100"""
+    }) { (s, d) =>
+      collocations(Tables.documents(s, d).select("text"), "text",
+        minCount = 5L, topK = 100)
     },
-    "text_sentences" ->
-      raw"""WITH d2 AS (SELECT doc_id, regexp_replace(text, ' table ', ' table. ', 'g') AS text FROM documents), sp AS (SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[.!?]+(\s+|$$)'), s -> trim(s)), s -> s != '') AS ss FROM d2) SELECT doc_id, (i - 1)::BIGINT AS sent_idx, ss[i] AS sentence, len(string_split_regex(trim(ss[i]), '\s+'))::BIGINT AS n_tokens FROM (SELECT doc_id, ss, unnest(range(1, len(ss) + 1)) AS i FROM sp) ORDER BY doc_id, sent_idx""",
-    // the text_sentences split, a (sentence -> df, first_doc) agg over
+
+    // corpus-trained bigram LM score (the perplexity-filter stand-in)
+    // oracle: same two-pass shape: bigram model CTEs, then per-doc quantized sums
+    Query("text_lm_score", corpusGrain = true, Some(
+      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t != '') AS t FROM documents), uc AS (SELECT w, count(*) AS c1 FROM (SELECT unnest(t) AS w FROM tk) GROUP BY w), vv AS (SELECT count(*) AS v FROM uc), db AS (SELECT doc_id, t[i-1] AS w1, t[i] AS w2 FROM (SELECT doc_id, t, unnest(range(2, len(t) + 1)) AS i FROM tk WHERE len(t) >= 2)), bc AS (SELECT w1, w2, count(*) AS c12 FROM db GROUP BY w1, w2), s AS (SELECT db.doc_id, CAST(floor(ln((bc.c12 + 1)::DOUBLE / (uc.c1 + vv.v)::DOUBLE) * 10000) AS BIGINT) AS li FROM db JOIN bc USING (w1, w2) JOIN uc ON db.w1 = uc.w CROSS JOIN vv) SELECT doc_id, sum(li)::BIGINT AS logp_q4, count(*) AS n_bigrams, sum(li)::DOUBLE / (count(*)::DOUBLE * 10000.0) AS avg_logp FROM s GROUP BY doc_id ORDER BY doc_id""")) { (s, d) =>
+      lmScore(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text")
+        .orderBy("doc_id")
+    },
+
+    // doc-frequency of repeated sentences over the same punctuated
+    // derivation — the strip-before-tokenize boilerplate report
+    Query("text_boilerplate", corpusGrain = false, Some(
+      raw"""WITH d2 AS (SELECT doc_id, regexp_replace(text, ' table ', ' table. ', 'g') AS text FROM documents), sp AS (SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[.!?]+(\s+|$$)'), s -> trim(s)), s -> s != '') AS ss FROM d2), ds AS (SELECT DISTINCT doc_id, unnest(ss) AS sentence FROM sp) SELECT sentence, count(*) AS n_docs FROM ds GROUP BY sentence HAVING count(*) >= 2 ORDER BY n_docs DESC, sentence ASC LIMIT 100""")) { (s, d) =>
+      boilerplate(Tables.documents(s, d)
+          .select(col("doc_id"),
+            regexp_replace(col("text"), " table ", " table. ").as("text")),
+        "doc_id", "text", minDocs = 2L, topK = 100)
+    },
+
+    // the corpus is unpunctuated word soup, so the query derives a
+    // deterministically punctuated column first (same rewrite in the
+    // oracle) — the segmenter itself is what's under test
+    Query("text_sentences", corpusGrain = true, Some(
+      raw"""WITH d2 AS (SELECT doc_id, regexp_replace(text, ' table ', ' table. ', 'g') AS text FROM documents), sp AS (SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[.!?]+(\s+|$$)'), s -> trim(s)), s -> s != '') AS ss FROM d2) SELECT doc_id, (i - 1)::BIGINT AS sent_idx, ss[i] AS sentence, len(string_split_regex(trim(ss[i]), '\s+'))::BIGINT AS n_tokens FROM (SELECT doc_id, ss, unnest(range(1, len(ss) + 1)) AS i FROM sp) ORDER BY doc_id, sent_idx""")) { (s, d) =>
+      sentences(Tables.documents(s, d)
+          .select(col("doc_id"),
+            regexp_replace(col("text"), " table ", " table. ").as("text")),
+        "doc_id", "text")
+        .orderBy("doc_id", "sent_idx")
+    },
+
+    // sentence-level dedup with removal over the same punctuated column:
+    // repeated sentences survive only in their lowest-id doc
+    // oracle: the text_sentences split, a (sentence -> df, first_doc) agg over
     // distinct pairs, keep-first filter, ordered re-concat
-    "text_dedup_sentences" ->
-      raw"""WITH d2 AS (SELECT doc_id, regexp_replace(text, ' table ', ' table. ', 'g') AS text FROM documents), sp AS (SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[.!?]+(\s+|$$)'), s -> trim(s)), s -> s != '') AS ss FROM d2), s AS (SELECT doc_id, (i - 1)::BIGINT AS sent_idx, ss[i] AS sentence FROM (SELECT doc_id, ss, unnest(range(1, len(ss) + 1)) AS i FROM sp)), ds AS (SELECT DISTINCT doc_id, sentence FROM s), fr AS (SELECT sentence, count(*) AS n_docs, min(doc_id) AS first_doc FROM ds GROUP BY sentence HAVING count(*) >= 2), k AS (SELECT s.doc_id, s.sent_idx, s.sentence, (fr.sentence IS NULL OR s.doc_id = fr.first_doc) AS keep FROM s LEFT JOIN fr USING (sentence)), agg AS (SELECT doc_id, count(*) AS n_sents, sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept, coalesce(string_agg(CASE WHEN keep THEN sentence END, '. ' ORDER BY sent_idx), '') AS clean_text FROM k GROUP BY doc_id) SELECT d.doc_id, coalesce(a.n_sents, 0)::BIGINT AS n_sents, coalesce(a.n_kept, 0)::BIGINT AS n_kept, coalesce(a.clean_text, '') AS clean_text FROM documents d LEFT JOIN agg a USING (doc_id) ORDER BY d.doc_id""",
-    "text_boilerplate" ->
-      raw"""WITH d2 AS (SELECT doc_id, regexp_replace(text, ' table ', ' table. ', 'g') AS text FROM documents), sp AS (SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[.!?]+(\s+|$$)'), s -> trim(s)), s -> s != '') AS ss FROM d2), ds AS (SELECT DISTINCT doc_id, unnest(ss) AS sentence FROM sp) SELECT sentence, count(*) AS n_docs FROM ds GROUP BY sentence HAVING count(*) >= 2 ORDER BY n_docs DESC, sentence ASC LIMIT 100""",
-    // the ExactSubstr replay: 8-gram occurrences keyed by md5 of the
+    Query("text_dedup_sentences", corpusGrain = true, Some(
+      raw"""WITH d2 AS (SELECT doc_id, regexp_replace(text, ' table ', ' table. ', 'g') AS text FROM documents), sp AS (SELECT doc_id, list_filter(list_transform(string_split_regex(text, '[.!?]+(\s+|$$)'), s -> trim(s)), s -> s != '') AS ss FROM d2), s AS (SELECT doc_id, (i - 1)::BIGINT AS sent_idx, ss[i] AS sentence FROM (SELECT doc_id, ss, unnest(range(1, len(ss) + 1)) AS i FROM sp)), ds AS (SELECT DISTINCT doc_id, sentence FROM s), fr AS (SELECT sentence, count(*) AS n_docs, min(doc_id) AS first_doc FROM ds GROUP BY sentence HAVING count(*) >= 2), k AS (SELECT s.doc_id, s.sent_idx, s.sentence, (fr.sentence IS NULL OR s.doc_id = fr.first_doc) AS keep FROM s LEFT JOIN fr USING (sentence)), agg AS (SELECT doc_id, count(*) AS n_sents, sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept, coalesce(string_agg(CASE WHEN keep THEN sentence END, '. ' ORDER BY sent_idx), '') AS clean_text FROM k GROUP BY doc_id) SELECT d.doc_id, coalesce(a.n_sents, 0)::BIGINT AS n_sents, coalesce(a.n_kept, 0)::BIGINT AS n_kept, coalesce(a.clean_text, '') AS clean_text FROM documents d LEFT JOIN agg a USING (doc_id) ORDER BY d.doc_id""")) { (s, d) =>
+      dedupSentences(Tables.documents(s, d)
+          .select(col("doc_id"),
+            regexp_replace(col("text"), " table ", " table. ").as("text")),
+        "doc_id", "text")
+        .orderBy("doc_id")
+    },
+
+    // the ExactSubstr pass (Lee et al. 2022): every >=8-token span
+    // duplicated anywhere in the corpus (cross-doc or within-doc) is
+    // removed everywhere except its first (doc, pos) occurrence, and
+    // each doc's surviving tokens reassemble into a cleaned corpus
+    // oracle: the ExactSubstr replay: 8-gram occurrences keyed by md5 of the
     // chr(31)-joined window, first (doc, pos) per gram via row_number,
     // non-first occurrences explode their covered positions, tokens
     // LEFT JOIN the cover and re-concat in position order
-    "text_dedup_spans_removal" ->
-      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), t -> t != '') AS t FROM documents), kg AS (SELECT doc_id, i - 1 AS pos, md5(array_to_string(t[i:i+7], chr(31))) AS g FROM (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS i FROM tk WHERE len(t) >= 8)), rm AS (SELECT doc_id, pos FROM (SELECT doc_id, pos, row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn FROM kg) WHERE rn > 1), cov AS (SELECT DISTINCT doc_id, tpos FROM (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS tpos FROM rm)), tok AS (SELECT doc_id, i - 1 AS tpos, t[i] AS token FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM tk)), ag AS (SELECT t.doc_id, count(*) AS n_tokens, sum(CASE WHEN c.tpos IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_removed, coalesce(string_agg(CASE WHEN c.tpos IS NULL THEN t.token END, ' ' ORDER BY t.tpos), '') AS clean_text FROM tok t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.tpos = c.tpos GROUP BY t.doc_id) SELECT k.doc_id, coalesce(a.n_tokens, 0)::BIGINT AS n_tokens, coalesce(a.n_removed, 0)::BIGINT AS n_removed, coalesce(a.clean_text, '') AS clean_text FROM tk k LEFT JOIN ag a USING (doc_id) ORDER BY k.doc_id""",
-    // same two-pass shape: bigram model CTEs, then per-doc quantized sums
-    "text_lm_score" ->
-      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t != '') AS t FROM documents), uc AS (SELECT w, count(*) AS c1 FROM (SELECT unnest(t) AS w FROM tk) GROUP BY w), vv AS (SELECT count(*) AS v FROM uc), db AS (SELECT doc_id, t[i-1] AS w1, t[i] AS w2 FROM (SELECT doc_id, t, unnest(range(2, len(t) + 1)) AS i FROM tk WHERE len(t) >= 2)), bc AS (SELECT w1, w2, count(*) AS c12 FROM db GROUP BY w1, w2), s AS (SELECT db.doc_id, CAST(floor(ln((bc.c12 + 1)::DOUBLE / (uc.c1 + vv.v)::DOUBLE) * 10000) AS BIGINT) AS li FROM db JOIN bc USING (w1, w2) JOIN uc ON db.w1 = uc.w CROSS JOIN vv) SELECT doc_id, sum(li)::BIGINT AS logp_q4, count(*) AS n_bigrams, sum(li)::DOUBLE / (count(*)::DOUBLE * 10000.0) AS avg_logp FROM s GROUP BY doc_id ORDER BY doc_id""",
-    "text_pii_mask" ->
-      raw"""SELECT event_id, regexp_replace(regexp_replace(props, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '<EMAIL>', 'g'), '[0-9]+', '<NUM>', 'g') AS masked FROM events ORDER BY event_id""",
-    "text_tfidf_top" ->
-      raw"""WITH p AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term FROM documents), tf AS (SELECT doc_id, term, count(*) AS tf FROM p GROUP BY doc_id, term), dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term), nn AS (SELECT count(*) AS n FROM documents), s AS (SELECT tf.doc_id, tf.term, round(tf.tf * ln(1.0 + nn.n / dfq.df), 4) AS tfidf FROM tf JOIN dfq USING (term) CROSS JOIN nn), r AS (SELECT doc_id, term, tfidf, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rank FROM s) SELECT doc_id, term, tfidf, rank FROM r WHERE rank <= 3 ORDER BY doc_id, rank""",
+    Query("text_dedup_spans_removal", corpusGrain = true, Some(
+      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), t -> t != '') AS t FROM documents), kg AS (SELECT doc_id, i - 1 AS pos, md5(array_to_string(t[i:i+7], chr(31))) AS g FROM (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS i FROM tk WHERE len(t) >= 8)), rm AS (SELECT doc_id, pos FROM (SELECT doc_id, pos, row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn FROM kg) WHERE rn > 1), cov AS (SELECT DISTINCT doc_id, tpos FROM (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS tpos FROM rm)), tok AS (SELECT doc_id, i - 1 AS tpos, t[i] AS token FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM tk)), ag AS (SELECT t.doc_id, count(*) AS n_tokens, sum(CASE WHEN c.tpos IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_removed, coalesce(string_agg(CASE WHEN c.tpos IS NULL THEN t.token END, ' ' ORDER BY t.tpos), '') AS clean_text FROM tok t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.tpos = c.tpos GROUP BY t.doc_id) SELECT k.doc_id, coalesce(a.n_tokens, 0)::BIGINT AS n_tokens, coalesce(a.n_removed, 0)::BIGINT AS n_removed, coalesce(a.clean_text, '') AS clean_text FROM tk k LEFT JOIN ag a USING (doc_id) ORDER BY k.doc_id""")) { (s, d) =>
+      dedupSpansRemoval(Tables.documents(s, d).select("doc_id", "text"),
+        "doc_id", "text", k = 8)
+        .orderBy("doc_id")
+    },
 
-    // identical floor-quantized arithmetic; same literal constants
+    // events.props carries digits, so the mask is non-vacuous there
+    Query("text_pii_mask", corpusGrain = true, Some(
+      raw"""SELECT event_id, regexp_replace(regexp_replace(props, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '<EMAIL>', 'g'), '[0-9]+', '<NUM>', 'g') AS masked FROM events ORDER BY event_id""")) { (s, d) =>
+      piiMask(Tables.events(s, d).select("event_id", "props"), "props", "masked")
+        .select("event_id", "masked")
+        .orderBy("event_id")
+    },
+
+    Query("text_winnow_fingerprint", corpusGrain = true, Some(
+      s"""WITH hs AS (SELECT doc_id, CASE WHEN length(text) >= 8 THEN list_transform(range(1, length(text) - 6), i -> ${sqlHex32("substr(text, i, 8)")}) ELSE []::BIGINT[] END AS hl FROM documents), wn AS (SELECT doc_id, CASE WHEN len(hl) >= 4 THEN list_distinct(list_transform(range(1, len(hl) - 2), j -> list_min(hl[j:j+3]))) ELSE []::BIGINT[] END AS fps FROM hs) SELECT doc_id, md5(array_to_string(list_sort(fps), ',')) AS doc_fp, len(fps)::BIGINT AS n_fps FROM wn ORDER BY doc_id""")) { (s, d) =>
+      winnowFingerprint(Tables.documents(s, d).select("doc_id", "text"),
+        "doc_id", "text", k = 8, w = 4)
+        .select("doc_id", "doc_fp", "n_fps")
+        .orderBy("doc_id")
+    },
+
+    Query("text_tfidf_top", corpusGrain = true, Some(
+      raw"""WITH p AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term FROM documents), tf AS (SELECT doc_id, term, count(*) AS tf FROM p GROUP BY doc_id, term), dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term), nn AS (SELECT count(*) AS n FROM documents), s AS (SELECT tf.doc_id, tf.term, round(tf.tf * ln(1.0 + nn.n / dfq.df), 4) AS tfidf FROM tf JOIN dfq USING (term) CROSS JOIN nn), r AS (SELECT doc_id, term, tfidf, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rank FROM s) SELECT doc_id, term, tfidf, rank FROM r WHERE rank <= 3 ORDER BY doc_id, rank""")) { (s, d) =>
+      tfIdfTop(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text", k = 3)
+        .orderBy("doc_id", "rank")
+    },
+
+    // ranked retrieval: top-20 docs for a 3-term query, Okapi BM25
+    // oracle: identical floor-quantized arithmetic; same literal constants
     // (2.2 = k1+1, 0.25 = 1-b) and the same association order
-    "text_bm25_search" ->
-      raw"""WITH tk AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t FROM documents), dl AS (SELECT doc_id, len(t)::BIGINT AS dl FROM tk), st AS (SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS total_dl FROM dl), tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM (SELECT doc_id, unnest(t) AS term FROM tk) WHERE term IN ('spark', 'merge', 'window') GROUP BY doc_id, term), dfq AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY term), sc AS (SELECT tf.doc_id, floor(10000.0 * ln(1.0 + (st.n - dfq.df + 0.5) / (dfq.df + 0.5)) * (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * (dl.dl * st.n)::DOUBLE / st.total_dl)))::BIGINT AS cq4 FROM tf JOIN dfq USING (term) JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN st) SELECT doc_id, count(*)::BIGINT AS n_terms_hit, sum(cq4)::BIGINT AS bm25_q4, sum(cq4) / 10000.0 AS bm25 FROM sc GROUP BY doc_id ORDER BY bm25_q4 DESC, doc_id ASC LIMIT 20""",
-    "text_winnow_fingerprint" ->
-      s"""WITH hs AS (SELECT doc_id, CASE WHEN length(text) >= 8 THEN list_transform(range(1, length(text) - 6), i -> ${sqlHex32("substr(text, i, 8)")}) ELSE []::BIGINT[] END AS hl FROM documents), wn AS (SELECT doc_id, CASE WHEN len(hl) >= 4 THEN list_distinct(list_transform(range(1, len(hl) - 2), j -> list_min(hl[j:j+3]))) ELSE []::BIGINT[] END AS fps FROM hs) SELECT doc_id, md5(array_to_string(list_sort(fps), ',')) AS doc_fp, len(fps)::BIGINT AS n_fps FROM wn ORDER BY doc_id""",
-    "text_pack_sequences" ->
-      raw"""WITH t AS (SELECT doc_id, doc_id % 8 AS shard, len(string_split_regex(trim(text), '\s+'))::BIGINT AS ws_tokens FROM documents), c AS (SELECT doc_id, shard, ws_tokens, sum(ws_tokens) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ws_tokens AS cum FROM t) SELECT doc_id, shard, ws_tokens, (cum // 2048)::BIGINT AS pack_id, (cum % 2048)::BIGINT AS pack_offset FROM c ORDER BY doc_id""",
-    "sample_stratified" ->
-      """SELECT doc_id, lang, source FROM (SELECT doc_id, lang, source, row_number() OVER (PARTITION BY lang ORDER BY md5(doc_id::VARCHAR) ASC, doc_id ASC) AS rk FROM documents) WHERE rk <= 50 ORDER BY doc_id""",
-    // same winnow CTE as text_winnow_fingerprint (k=8, w=4), then span
-    // document frequencies and the per-doc Stable-rounded indicator mean
-    "text_dup_spans" ->
-      s"""WITH hs AS (SELECT doc_id, CASE WHEN length(text) >= 8 THEN list_transform(range(1, length(text) - 6), i -> ${sqlHex32("substr(text, i, 8)")}) ELSE []::BIGINT[] END AS hl FROM documents), wn AS (SELECT doc_id, CASE WHEN len(hl) >= 4 THEN list_distinct(list_transform(range(1, len(hl) - 2), j -> list_min(hl[j:j+3]))) ELSE []::BIGINT[] END AS fps FROM hs), u AS (SELECT doc_id, unnest(fps) AS fp FROM wn), dfs AS (SELECT fp, count(*) AS df FROM u GROUP BY fp), j AS (SELECT u.doc_id, CASE WHEN dfs.df >= 2 THEN 1 ELSE 0 END AS ind FROM u JOIN dfs USING (fp)), per AS (SELECT doc_id, count(*) AS n_fps, sum(ind)::BIGINT AS n_shared, ${Stable.sqlAvgRounded("ind", 4)} AS dup_span_frac FROM j GROUP BY doc_id) SELECT w.doc_id, coalesce(p.n_fps, 0)::BIGINT AS n_fps, coalesce(p.n_shared, 0)::BIGINT AS n_shared, coalesce(p.dup_span_frac, 0.0) AS dup_span_frac FROM wn w LEFT JOIN per p USING (doc_id) ORDER BY doc_id""",
-    // the text_dup_spans winnow CTE split benchmark/corpus: distinct
-    // benchmark fps, per-corpus-doc collision count, Stable ratio
-    "decon_spans" ->
-      s"""WITH hs AS (SELECT doc_id, CASE WHEN length(text) >= 8 THEN list_transform(range(1, length(text) - 6), i -> ${sqlHex32("substr(text, i, 8)")}) ELSE []::BIGINT[] END AS hl FROM documents), wn AS (SELECT doc_id, CASE WHEN len(hl) >= 4 THEN list_distinct(list_transform(range(1, len(hl) - 2), j -> list_min(hl[j:j+3]))) ELSE []::BIGINT[] END AS fps FROM hs), b AS (SELECT DISTINCT unnest(fps) AS fp FROM wn WHERE doc_id < 20), c AS (SELECT doc_id, fps FROM wn WHERE doc_id >= 20), u AS (SELECT doc_id, unnest(fps) AS fp FROM c), h AS (SELECT u.doc_id, count(*) AS n_hits FROM u JOIN b USING (fp) GROUP BY u.doc_id) SELECT c.doc_id, len(c.fps)::BIGINT AS n_fps, coalesce(h.n_hits, 0)::BIGINT AS n_hits, CASE WHEN len(c.fps) = 0 THEN 0.0 ELSE ${Stable.sqlRatioRounded("coalesce(h.n_hits, 0)", "len(c.fps)", 4)} END AS contam_frac FROM c LEFT JOIN h USING (doc_id) ORDER BY c.doc_id""",
+    Query("text_bm25_search", corpusGrain = false, Some(
+      raw"""WITH tk AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t FROM documents), dl AS (SELECT doc_id, len(t)::BIGINT AS dl FROM tk), st AS (SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS total_dl FROM dl), tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM (SELECT doc_id, unnest(t) AS term FROM tk) WHERE term IN ('spark', 'merge', 'window') GROUP BY doc_id, term), dfq AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY term), sc AS (SELECT tf.doc_id, floor(10000.0 * ln(1.0 + (st.n - dfq.df + 0.5) / (dfq.df + 0.5)) * (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * (dl.dl * st.n)::DOUBLE / st.total_dl)))::BIGINT AS cq4 FROM tf JOIN dfq USING (term) JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN st) SELECT doc_id, count(*)::BIGINT AS n_terms_hit, sum(cq4)::BIGINT AS bm25_q4, sum(cq4) / 10000.0 AS bm25 FROM sc GROUP BY doc_id ORDER BY bm25_q4 DESC, doc_id ASC LIMIT 20""")) { (s, d) =>
+      bm25Search(Tables.documents(s, d).select("doc_id", "text"), "doc_id", "text",
+        queryTerms = Seq("spark", "merge", "window"), topK = 20)
+    },
 
-    // the same 4-nibble draw the mix_sources oracle uses; cut arithmetic
+    // context-window packing: docs laid end-to-end per shard (doc_id % 8),
+    // 2048-token windows; each doc reports its pack and offset
+    Query("text_pack_sequences", corpusGrain = true, Some(
+      raw"""WITH t AS (SELECT doc_id, doc_id % 8 AS shard, len(string_split_regex(trim(text), '\s+'))::BIGINT AS ws_tokens FROM documents), c AS (SELECT doc_id, shard, ws_tokens, sum(ws_tokens) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ws_tokens AS cum FROM t) SELECT doc_id, shard, ws_tokens, (cum // 2048)::BIGINT AS pack_id, (cum % 2048)::BIGINT AS pack_offset FROM c ORDER BY doc_id""")) { (s, d) =>
+      val t = tokenCount(Tables.documents(s, d).select("doc_id", "text"), "text")
+        .withColumn("shard", pmod(col("doc_id"), lit(8L)))
+        .select("doc_id", "shard", "ws_tokens")
+      packSequences(t, idCol = "doc_id", shardCol = "shard",
+        tokensCol = "ws_tokens", budget = 2048L)
+        .select("doc_id", "shard", "ws_tokens", "pack_id", "pack_offset")
+        .orderBy("doc_id")
+    },
+
+    // packing denominated in TRUE tokenizer tokens: the learned-merge
+    // encode feeds the same shard-local prefix-sum packer, so window
+    // budgets mean what the training job thinks they mean
+    // oracle: the bpe per-doc counts through the same shard-local prefix-sum
+    // packer as text_pack_sequences
+    Query("text_pack_bpe", corpusGrain = true, Some(
+      s"""WITH ${bpePerDocCtes(bpeMergeK)}, pt AS (SELECT doc_id, doc_id % 8 AS shard, bpe_tokens FROM bpd), pc AS (SELECT doc_id, shard, bpe_tokens, sum(bpe_tokens) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - bpe_tokens AS cum FROM pt) SELECT doc_id, shard, bpe_tokens, (cum // 2048)::BIGINT AS pack_id, (cum % 2048)::BIGINT AS pack_offset FROM pc ORDER BY doc_id""")) { (s, d) =>
+      val perDoc = bpeEncode(Tables.documents(s, d).select("doc_id", "text"),
+        "doc_id", "text", mergesFor(s, d))
+        .withColumn("shard", pmod(col("doc_id"), lit(8L)))
+        .select("doc_id", "shard", "bpe_tokens")
+      packSequences(perDoc, idCol = "doc_id", shardCol = "shard",
+        tokensCol = "bpe_tokens", budget = 2048L)
+        .select("doc_id", "shard", "bpe_tokens", "pack_id", "pack_offset")
+        .orderBy("doc_id")
+    },
+
+    // the corpus curator's first query: per (lang, source) composition
+    Query("corpus_report", corpusGrain = false, Some {
+      val alphaR = Stable.sqlRatioRounded("alpha", "ln", 4)
+      val punctR = Stable.sqlRatioRounded("punct", "ln", 4)
+      val stopR = Stable.sqlRatioRounded("stops", "ntok", 4)
+      raw"""WITH c AS (SELECT doc_id, source, length(text) AS ln, length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha, length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS punct, len(string_split_regex(trim(text), '\s+')) AS ntok, len(list_filter(string_split_regex(trim(text), '\s+'), t -> t IN ($enIn))) AS stops, string_split_regex(trim(lower(text)), '\s+') AS tk FROM documents), h AS (SELECT source, ntok, round($alphaR - $punctR + least($stopR * 2, 0.5), 4) AS q, len(list_filter(tk, x -> x IN ($enIn))) AS en_hits, len(list_filter(tk, x -> x IN ($esIn))) AS es_hits, len(list_filter(tk, x -> x IN ($frIn))) AS fr_hits FROM c), l AS (SELECT source, ntok, q, CASE WHEN en_hits = 0 AND es_hits = 0 AND fr_hits = 0 THEN 'und' WHEN en_hits >= es_hits AND en_hits >= fr_hits THEN 'en' WHEN es_hits >= fr_hits THEN 'es' ELSE 'fr' END AS lang_pred FROM h) SELECT lang_pred, source, count(*) AS n_docs, sum(ntok)::BIGINT AS total_tokens, ${Stable.sqlAvgRounded("q", 4)} AS avg_quality, (count(*) FILTER (WHERE ntok >= 20))::BIGINT AS n_gate_pass FROM l GROUP BY lang_pred, source ORDER BY lang_pred, source"""
+    }) { (s, d) =>
+      corpusReport(Tables.documents(s, d).select("doc_id", "text", "source"),
+        "text", "source", minTokens = 20L)
+        .orderBy("lang_pred", "source")
+    },
+
+    // deterministic 50-per-language sample by md5 rank
+    Query("sample_stratified", corpusGrain = false, Some(
+      """SELECT doc_id, lang, source FROM (SELECT doc_id, lang, source, row_number() OVER (PARTITION BY lang ORDER BY md5(doc_id::VARCHAR) ASC, doc_id ASC) AS rk FROM documents) WHERE rk <= 50 ORDER BY doc_id""")) { (s, d) =>
+      sampleStratified(Tables.documents(s, d).select("doc_id", "lang", "source"),
+        stratumCol = "lang", idCol = "doc_id", k = 50)
+        .orderBy("doc_id")
+    },
+
+    // span-level duplication gate: share of each doc's winnow fingerprints
+    // that recur elsewhere in the corpus
+    // oracle: same winnow CTE as text_winnow_fingerprint (k=8, w=4), then span
+    // document frequencies and the per-doc Stable-rounded indicator mean
+    Query("text_dup_spans", corpusGrain = true, Some(
+      s"""WITH hs AS (SELECT doc_id, CASE WHEN length(text) >= 8 THEN list_transform(range(1, length(text) - 6), i -> ${sqlHex32("substr(text, i, 8)")}) ELSE []::BIGINT[] END AS hl FROM documents), wn AS (SELECT doc_id, CASE WHEN len(hl) >= 4 THEN list_distinct(list_transform(range(1, len(hl) - 2), j -> list_min(hl[j:j+3]))) ELSE []::BIGINT[] END AS fps FROM hs), u AS (SELECT doc_id, unnest(fps) AS fp FROM wn), dfs AS (SELECT fp, count(*) AS df FROM u GROUP BY fp), j AS (SELECT u.doc_id, CASE WHEN dfs.df >= 2 THEN 1 ELSE 0 END AS ind FROM u JOIN dfs USING (fp)), per AS (SELECT doc_id, count(*) AS n_fps, sum(ind)::BIGINT AS n_shared, ${Stable.sqlAvgRounded("ind", 4)} AS dup_span_frac FROM j GROUP BY doc_id) SELECT w.doc_id, coalesce(p.n_fps, 0)::BIGINT AS n_fps, coalesce(p.n_shared, 0)::BIGINT AS n_shared, coalesce(p.dup_span_frac, 0.0) AS dup_span_frac FROM wn w LEFT JOIN per p USING (doc_id) ORDER BY doc_id""")) { (s, d) =>
+      dupSpanFraction(Tables.documents(s, d).select("doc_id", "text"),
+        "doc_id", "text", k = 8, w = 4)
+        .orderBy("doc_id")
+    },
+
+    // span-level decontamination: share of each corpus doc's winnow
+    // fingerprints colliding with the benchmark set (doc_id < 20)
+    // oracle: the text_dup_spans winnow CTE split benchmark/corpus: distinct
+    // benchmark fps, per-corpus-doc collision count, Stable ratio
+    Query("decon_spans", corpusGrain = true, Some(
+      s"""WITH hs AS (SELECT doc_id, CASE WHEN length(text) >= 8 THEN list_transform(range(1, length(text) - 6), i -> ${sqlHex32("substr(text, i, 8)")}) ELSE []::BIGINT[] END AS hl FROM documents), wn AS (SELECT doc_id, CASE WHEN len(hl) >= 4 THEN list_distinct(list_transform(range(1, len(hl) - 2), j -> list_min(hl[j:j+3]))) ELSE []::BIGINT[] END AS fps FROM hs), b AS (SELECT DISTINCT unnest(fps) AS fp FROM wn WHERE doc_id < 20), c AS (SELECT doc_id, fps FROM wn WHERE doc_id >= 20), u AS (SELECT doc_id, unnest(fps) AS fp FROM c), h AS (SELECT u.doc_id, count(*) AS n_hits FROM u JOIN b USING (fp) GROUP BY u.doc_id) SELECT c.doc_id, len(c.fps)::BIGINT AS n_fps, coalesce(h.n_hits, 0)::BIGINT AS n_hits, CASE WHEN len(c.fps) = 0 THEN 0.0 ELSE ${Stable.sqlRatioRounded("coalesce(h.n_hits, 0)", "len(c.fps)", 4)} END AS contam_frac FROM c LEFT JOIN h USING (doc_id) ORDER BY c.doc_id""")) { (s, d) =>
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+      spanContamination(docs.filter(col("doc_id") >= 20),
+        docs.filter(col("doc_id") < 20), "doc_id", "text", k = 8, w = 4)
+        .orderBy("doc_id")
+    },
+
+    // stable 80/10/10 train/val/test assignment by content-hash draw
+    // oracle: the same 4-nibble draw the mix_sources oracle uses; cut arithmetic
     // mirrors Spark's double fold (integer draws never land on the 1e-10
     // cut differences, so 0.8/0.9 literals are safe)
-    "sample_hash_split" -> {
+    Query("sample_hash_split", corpusGrain = true, Some {
       val draw = (1 to 4).map(j =>
         s"((strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), $j, 1)) - 1)::BIGINT * ${1L << (4 * (4 - j))})")
         .mkString("(", " + ", ")")
       s"""SELECT doc_id, source, CASE WHEN $draw < 0.8 * 65536 THEN 'train' WHEN $draw < 0.9 * 65536 THEN 'val' ELSE 'test' END AS split FROM documents ORDER BY doc_id"""
+    }) { (s, d) =>
+      hashSplit(Tables.documents(s, d).select("doc_id", "source"), "doc_id",
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+        .orderBy("doc_id")
     },
-    "text_diversity" -> {
+
+    // lexical diversity: TTR + Simpson over the per-doc token table
+    Query("text_diversity", corpusGrain = true, Some {
       val ttr = Stable.sqlRatioRounded("a.distinct_tokens", "a.n_tokens", 4)
       val simpson = Stable.sqlRatioRounded(
         "a.n_tokens * a.n_tokens - a.sq", "a.n_tokens * a.n_tokens", 4)
       raw"""WITH tf AS (SELECT doc_id, t, count(*) AS c FROM (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS t FROM documents) u WHERE t != '' GROUP BY doc_id, t), a AS (SELECT doc_id, sum(c)::BIGINT AS n_tokens, count(*)::BIGINT AS distinct_tokens, sum(c*c)::BIGINT AS sq FROM tf GROUP BY doc_id) SELECT d.doc_id, coalesce(a.n_tokens, 0) AS n_tokens, coalesce(a.distinct_tokens, 0) AS distinct_tokens, coalesce($ttr, 0.0) AS ttr, coalesce($simpson, 0.0) AS simpson FROM documents d LEFT JOIN a USING (doc_id) ORDER BY d.doc_id"""
+    }) { (s, d) =>
+      tokenDiversity(Tables.documents(s, d).select("doc_id", "text"),
+        "doc_id", "text")
+        .orderBy("doc_id")
     },
 
-    "text_quality_band" -> {
+    // trim the quality tails: keep the p5-p95 band of quality_score
+    Query("text_quality_band", corpusGrain = true, Some {
       val alphaR = Stable.sqlRatioRounded("alpha", "ln", 4)
       val punctR = Stable.sqlRatioRounded("punct", "ln", 4)
       val stopR = Stable.sqlRatioRounded("stops", "ntok", 4)
       raw"""WITH c AS (SELECT doc_id, length(text) AS ln, length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha, length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS punct, len(string_split_regex(trim(text), '\s+')) AS ntok, len(list_filter(string_split_regex(trim(text), '\s+'), t -> t IN ($enIn))) AS stops FROM documents), q AS (SELECT doc_id, round($alphaR - $punctR + least($stopR * 2, 0.5), 4) AS quality_score FROM c), p AS (SELECT doc_id, quality_score, round(percent_rank() OVER (ORDER BY quality_score), 6) AS pr FROM q) SELECT doc_id, quality_score, pr FROM p WHERE pr >= 0.05 AND pr <= 0.95 ORDER BY doc_id"""
+    }) { (s, d) =>
+      qualityBand(
+        quality(Tables.documents(s, d).select("doc_id", "text"), "text")
+          .select("doc_id", "quality_score"),
+        scoreCol = "quality_score", lo = 0.05, hi = 0.95)
+        .select("doc_id", "quality_score", "pr")
+        .orderBy("doc_id")
     },
-    // mirrors the gate-before-mask shape: gates from the raw text, the
-    // mask applied only to gate survivors (same invariance argument)
-    "text_pipeline_e2e" ->
-      raw"""WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS tk, string_split_regex(trim(lower(text)), '\s+') AS lt FROM documents), h AS (SELECT doc_id, text, tk, len(list_filter(lt, x -> x IN ($enIn))) AS en_hits, len(list_filter(lt, x -> x IN ($esIn))) AS es_hits, len(list_filter(lt, x -> x IN ($frIn))) AS fr_hits FROM t), g AS (SELECT doc_id, text, len(tk)::BIGINT AS n_tokens FROM h WHERE len(tk) >= 20 AND NOT (en_hits = 0 AND es_hits = 0 AND fr_hits = 0) AND en_hits >= es_hits AND en_hits >= fr_hits), m AS (SELECT doc_id, n_tokens, regexp_replace(regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '<EMAIL>', 'g'), '[0-9]+', '<NUM>', 'g') AS clean FROM g), r AS (SELECT doc_id, clean, n_tokens, row_number() OVER (PARTITION BY md5(clean) ORDER BY doc_id) AS rn FROM m) SELECT doc_id, md5(array_to_string(list_sort(list_distinct(string_split_regex(trim(lower(clean)), '\s+'))), ' ')) AS fp, n_tokens FROM r WHERE rn = 1 ORDER BY doc_id"""
-  )
 
-  /** Composed audit: the fixture formula (label-aligned synthesized
-    * text, see [[synthesizeLangDocs]]) feeds the SAME langid replay the
-    * text_langid oracle states, so the audit cannot drift from the
-    * predictor it audits — and the matrix now measures the CLASSIFIER,
-    * not the corpus's label noise (r13). */
-  val oracles: Map[String, String] = oraclesBase + ("text_langid_eval" ->
-    raw"""WITH ld AS (SELECT doc_id,
-         |  CASE doc_id % 4 WHEN 0 THEN 'en' WHEN 1 THEN 'es' WHEN 2 THEN 'fr' ELSE 'und' END AS lang,
-         |  trim(
-         |    CASE doc_id % 4
-         |      WHEN 0 THEN CASE doc_id % 3 WHEN 0 THEN 'the' WHEN 1 THEN 'the and' ELSE 'the and of' END
-         |      WHEN 1 THEN CASE doc_id % 3 WHEN 0 THEN 'el' WHEN 1 THEN 'el que' ELSE 'el que los' END
-         |      WHEN 2 THEN CASE doc_id % 3 WHEN 0 THEN 'le' WHEN 1 THEN 'le et' ELSE 'le et les' END
-         |      ELSE '' END
-         |    || ' tok' || (doc_id % 7)::VARCHAR || ' zz' || (doc_id % 11)::VARCHAR
-         |    || CASE WHEN doc_id % 5 = 0 THEN
-         |         CASE doc_id % 4 WHEN 0 THEN ' el' WHEN 1 THEN ' the' WHEN 2 THEN ' el' ELSE ' the' END
-         |       ELSE '' END) AS text
-         |  FROM documents),
-         |t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk FROM ld),
-         |h AS (SELECT doc_id, len(list_filter(tk, x -> x IN ($enIn)))::BIGINT AS en_hits, len(list_filter(tk, x -> x IN ($esIn)))::BIGINT AS es_hits, len(list_filter(tk, x -> x IN ($frIn)))::BIGINT AS fr_hits FROM t),
-         |p AS (SELECT doc_id, CASE WHEN en_hits = 0 AND es_hits = 0 AND fr_hits = 0 THEN 'und' WHEN en_hits >= es_hits AND en_hits >= fr_hits THEN 'en' WHEN es_hits >= fr_hits THEN 'es' ELSE 'fr' END AS lang_pred FROM h)
-         |SELECT d.lang, p.lang_pred, count(*) AS n FROM p JOIN ld d USING (doc_id)
-         |GROUP BY d.lang, p.lang_pred ORDER BY lang, lang_pred""".stripMargin)
+    // The corpus-prep pipeline composed: PII mask -> token-count gate ->
+    // language gate -> exact dedup (keep-first) -> fingerprint. One
+    // declarative plan; projections fuse, the only shuffle is the dedup
+    // group-by. This is the shape of a real pre-training data pass.
+    // oracle: mirrors the gate-before-mask shape: gates from the raw text, the
+    // mask applied only to gate survivors (same invariance argument)
+    Query("text_pipeline_e2e", corpusGrain = true, Some(
+      raw"""WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS tk, string_split_regex(trim(lower(text)), '\s+') AS lt FROM documents), h AS (SELECT doc_id, text, tk, len(list_filter(lt, x -> x IN ($enIn))) AS en_hits, len(list_filter(lt, x -> x IN ($esIn))) AS es_hits, len(list_filter(lt, x -> x IN ($frIn))) AS fr_hits FROM t), g AS (SELECT doc_id, text, len(tk)::BIGINT AS n_tokens FROM h WHERE len(tk) >= 20 AND NOT (en_hits = 0 AND es_hits = 0 AND fr_hits = 0) AND en_hits >= es_hits AND en_hits >= fr_hits), m AS (SELECT doc_id, n_tokens, regexp_replace(regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '<EMAIL>', 'g'), '[0-9]+', '<NUM>', 'g') AS clean FROM g), r AS (SELECT doc_id, clean, n_tokens, row_number() OVER (PARTITION BY md5(clean) ORDER BY doc_id) AS rn FROM m) SELECT doc_id, md5(array_to_string(list_sort(list_distinct(string_split_regex(trim(lower(clean)), '\s+'))), ' ')) AS fp, n_tokens FROM r WHERE rn = 1 ORDER BY doc_id""")) { (s, d) =>
+      // Gates run on the RAW text, the mask on the survivors: ws_tokens
+      // and lang_pred are invariant under the PII mask (the replacements
+      // are token-internal — whitespace is never created or destroyed, and
+      // a token carrying '<EMAIL>'/'<NUM>' can never equal a stopword), so
+      // gating first is the same pipeline with the expensive mask regexes
+      // run on the ~9% of docs that pass instead of the whole corpus.
+      // (Also ws-count only — tokenCount's second (BPE-regex) count is the
+      // most expensive projection in that operator and nothing downstream
+      // reads it; a gate should compute exactly what it filters on.)
+      val counted = Tables.documents(s, d).select("doc_id", "text")
+        .withColumn("ws_tokens", size(tokens(col("text"))).cast("bigint"))
+      val gated = piiMask(
+        langId(counted, "text")
+          .filter(col("ws_tokens") >= 20 && col("lang_pred") === "en"),
+        "text", "clean")
+      // keep-first per content hash via a window, not groupBy+self-join:
+      // one pass (the upstream mask/gate branch would otherwise be
+      // recomputed on both sides of the join), one shuffle on the hash
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(md5(col("clean"))).orderBy(col("doc_id"))
+      gated.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+        .select(col("doc_id"), fingerprintCol(col("clean")).as("fp"),
+          col("ws_tokens").as("n_tokens"))
+        .orderBy("doc_id")
+    }
+  )
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.GraftFunctions
 
 /** Web-corpus ingest operators: URL canonicalization and URL-keyed
@@ -146,81 +146,6 @@ object Web {
         coalesce(GraftFunctions.robotsAllowed(col("rules"), col("path")), lit(true)))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // raw → canonical per document: the parser vs the formula
-    "url_canonicalize" -> ((s, d) =>
-      canonicalize(synthesizeUrls(Tables.documents(s, d), "doc_id"), "raw_url")
-        .select("doc_id", "raw_url", "url")
-        .orderBy("doc_id")),
-
-    // canonical-key dedup: v0-v3 collapse, v4 survives alone
-    "dedup_url" -> ((s, d) =>
-      dedupByUrl(
-        canonicalize(synthesizeUrls(Tables.documents(s, d), "doc_id"), "raw_url"),
-        "url", "doc_id")
-        .orderBy("url")),
-
-    // parsed rule list per site: the parser vs the formula
-    "web_robots_rules" -> ((s, d) =>
-      synthesizeRobots(Tables.documents(s, d), "doc_id")
-        .select(col("site"), posexplode(
-          GraftFunctions.robotsRules(col("robots"), lit("graftbot"))))
-        .select(col("site"), col("pos").as("idx"),
-          col("col.allow").as("allow"), col("col.pattern").as("pattern"))
-        .orderBy("site", "idx")),
-
-    // sitemap discovery: the crawl seed list a frontier planner reads
-    "web_sitemaps" -> ((s, d) =>
-      synthesizeRobots(Tables.documents(s, d), "doc_id")
-        .select(col("site"), posexplode(
-          GraftFunctions.robotsSitemaps(col("robots"))))
-        .select(col("site"), col("pos").as("idx"), col("col").as("sitemap"))
-        .orderBy("site", "idx")),
-
-    // crawl politeness gate over the canonical corpus
-    "web_robots_filter" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      robotsFilter(
-        canonicalize(synthesizeUrls(docs, "doc_id"), "raw_url"),
-        synthesizeRobots(docs, "doc_id"), "url")
-        .select("doc_id", "url", "allowed")
-        .orderBy("doc_id")
-    }),
-
-    // the web-ingest flagship: raw variants → canonical collapse →
-    // robots gate → admitted frontier, with sitemap seed presence —
-    // the family's pieces composed end-to-end into one per-site report
-    "web_ingest_e2e" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val gated = robotsFilter(
-        canonicalize(synthesizeUrls(docs, "doc_id"), "raw_url"),
-        synthesizeRobots(docs, "doc_id"), "url")
-      val raw = gated.groupBy("site").agg(count(lit(1)).as("n_raw"))
-      val canon = gated.select("site", "url").distinct()
-        .groupBy("site").agg(count(lit(1)).as("n_canonical"))
-      val adm = gated.filter(col("allowed")).select("site", "url").distinct()
-        .groupBy("site").agg(count(lit(1)).as("n_admitted"))
-      val sm = synthesizeRobots(docs, "doc_id").select(col("site"),
-        (size(GraftFunctions.robotsSitemaps(col("robots"))) > 0).as("has_sitemap"))
-      raw.join(canon, Seq("site")).join(adm, Seq("site"), "left")
-        .na.fill(0L, Seq("n_admitted"))
-        .join(sm, Seq("site"))
-        .orderBy("site")
-    }),
-
-    // per-site crawlable share: the politeness report a crawl planner reads
-    "web_robots_report" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      robotsFilter(
-        canonicalize(synthesizeUrls(docs, "doc_id"), "raw_url"),
-        synthesizeRobots(docs, "doc_id"), "url")
-        .groupBy("site")
-        .agg(count(lit(1)).as("n_urls"),
-          sum(when(col("allowed"), 1L).otherwise(0L)).as("n_allowed"))
-        .orderBy("site")
-    })
-  )
-
   /** DuckDB formula replay. `u` states both strings from doc_id alone —
     * the canonical is built pre-sorted/pre-normalized (id < page in
     * byte order), never parsed. */
@@ -245,23 +170,36 @@ object Web {
       |      || '://www.site' || site || '.example.com/cat' || p || '/item?id=' || q || '&page=' || p AS url
       |  FROM u)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "url_canonicalize" ->
-      s"WITH $urlCte SELECT doc_id, raw_url, url FROM urls ORDER BY doc_id",
-    // NOTE: plain concatenation, no second stripMargin — urlCte is
+  val queries: Seq[Query] = Seq(
+    // raw → canonical per document: the parser vs the formula
+    Query("url_canonicalize", corpusGrain = true, Some(
+      s"WITH $urlCte SELECT doc_id, raw_url, url FROM urls ORDER BY doc_id")) { (s, d) =>
+      canonicalize(synthesizeUrls(Tables.documents(s, d), "doc_id"), "raw_url")
+        .select("doc_id", "raw_url", "url")
+        .orderBy("doc_id")
+    },
+
+    // canonical-key dedup: v0-v3 collapse, v4 survives alone
+    // oracle: NOTE: plain concatenation, no second stripMargin — urlCte is
     // already margin-stripped, and re-stripping would eat the leading
     // pipe of its `|| '://www.site'` continuation line (r9 ERR row)
-    "dedup_url" ->
-      (s"WITH $urlCte " +
+    Query("dedup_url", corpusGrain = true, Some(
+      s"WITH $urlCte " +
         "SELECT url, count(*) AS n_raw, min(doc_id) AS keeper " +
-        "FROM urls GROUP BY url ORDER BY url"),
+        "FROM urls GROUP BY url ORDER BY url")) { (s, d) =>
+      dedupByUrl(
+        canonicalize(synthesizeUrls(Tables.documents(s, d), "doc_id"), "raw_url"),
+        "url", "doc_id")
+        .orderBy("url")
+    },
 
-    // exact graftbot groups exist for s%3==0 (rule group), s%7==3
+    // parsed rule list per site: the parser vs the formula
+    // oracle: exact graftbot groups exist for s%3==0 (rule group), s%7==3
     // (UA run split by Crawl-delay, merged with extrabot's disallow)
     // and s%7==5 (the rule-less empty-Disallow idiom); any of them
     // replaces the `*` group. File order: the s%3 rule precedes the
     // s%7==3 rule.
-    "web_robots_rules" ->
+    Query("web_robots_rules", corpusGrain = false, Some(
       """WITH sites AS (SELECT DISTINCT doc_id // 5 % 23 AS s FROM documents),
         |r AS (
         |  SELECT s, 0 AS idx, false AS allow,
@@ -278,9 +216,17 @@ object Web {
         |  FROM sites WHERE s % 3 <> 0 AND s % 7 <> 3 AND s % 7 <> 5
         |  UNION ALL SELECT s, 2, false, '/private/'
         |  FROM sites WHERE s % 3 <> 0 AND s % 7 <> 3 AND s % 7 <> 5)
-        |SELECT s AS site, idx, allow, pattern FROM r ORDER BY site, idx""".stripMargin,
+        |SELECT s AS site, idx, allow, pattern FROM r ORDER BY site, idx""".stripMargin)) { (s, d) =>
+      synthesizeRobots(Tables.documents(s, d), "doc_id")
+        .select(col("site"), posexplode(
+          GraftFunctions.robotsRules(col("robots"), lit("graftbot"))))
+        .select(col("site"), col("pos").as("idx"),
+          col("col.allow").as("allow"), col("col.pattern").as("pattern"))
+        .orderBy("site", "idx")
+    },
 
-    "web_sitemaps" ->
+    // sitemap discovery: the crawl seed list a frontier planner reads
+    Query("web_sitemaps", corpusGrain = false, Some(
       """WITH sites AS (SELECT DISTINCT doc_id // 5 % 23 AS s FROM documents),
         |m AS (
         |  SELECT s, 0 AS idx,
@@ -290,10 +236,17 @@ object Web {
         |  UNION ALL SELECT s, 1,
         |    'https://www.site' || CAST(s AS VARCHAR) || '.example.com/sitemap-news.xml'
         |  FROM sites WHERE s % 8 = 0)
-        |SELECT s AS site, idx, sitemap FROM m ORDER BY site, idx""".stripMargin,
+        |SELECT s AS site, idx, sitemap FROM m ORDER BY site, idx""".stripMargin)) { (s, d) =>
+      synthesizeRobots(Tables.documents(s, d), "doc_id")
+        .select(col("site"), posexplode(
+          GraftFunctions.robotsSitemaps(col("robots"))))
+        .select(col("site"), col("pos").as("idx"), col("col").as("sitemap"))
+        .orderBy("site", "idx")
+    },
 
-    "web_robots_filter" ->
-      (s"WITH $urlCte, " +
+    // crawl politeness gate over the canonical corpus
+    Query("web_robots_filter", corpusGrain = true, Some(
+      s"WITH $urlCte, " +
         """v AS (SELECT doc_id, url,
           |  (doc_id // 5) % 23 AS s, (doc_id // 5) % 11 AS p2, (doc_id // 5) % 101 AS q2
           |  FROM urls)
@@ -304,10 +257,20 @@ object Web {
           |       ELSE NOT (p2 = (s+1) % 11 AND
           |                 NOT (q2 = 1 OR q2 BETWEEN 10 AND 19 OR q2 = 100))
           |  END AS allowed
-          |FROM v ORDER BY doc_id""".stripMargin),
+          |FROM v ORDER BY doc_id""".stripMargin)) { (s, d) =>
+      val docs = Tables.documents(s, d)
+      robotsFilter(
+        canonicalize(synthesizeUrls(docs, "doc_id"), "raw_url"),
+        synthesizeRobots(docs, "doc_id"), "url")
+        .select("doc_id", "url", "allowed")
+        .orderBy("doc_id")
+    },
 
-    "web_ingest_e2e" ->
-      (s"WITH $urlCte, " +
+    // the web-ingest flagship: raw variants → canonical collapse →
+    // robots gate → admitted frontier, with sitemap seed presence —
+    // the family's pieces composed end-to-end into one per-site report
+    Query("web_ingest_e2e", corpusGrain = false, Some(
+      s"WITH $urlCte, " +
         """v AS (SELECT doc_id, url,
           |  (doc_id // 5) % 23 AS s, (doc_id // 5) % 11 AS p2, (doc_id // 5) % 101 AS q2
           |  FROM urls),
@@ -322,10 +285,27 @@ object Web {
           |  count(DISTINCT url) AS n_canonical,
           |  count(DISTINCT CASE WHEN allowed THEN url END) AS n_admitted,
           |  s % 4 = 0 AS has_sitemap
-          |FROM a GROUP BY s ORDER BY site""".stripMargin),
+          |FROM a GROUP BY s ORDER BY site""".stripMargin)) { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val gated = robotsFilter(
+        canonicalize(synthesizeUrls(docs, "doc_id"), "raw_url"),
+        synthesizeRobots(docs, "doc_id"), "url")
+      val raw = gated.groupBy("site").agg(count(lit(1)).as("n_raw"))
+      val canon = gated.select("site", "url").distinct()
+        .groupBy("site").agg(count(lit(1)).as("n_canonical"))
+      val adm = gated.filter(col("allowed")).select("site", "url").distinct()
+        .groupBy("site").agg(count(lit(1)).as("n_admitted"))
+      val sm = synthesizeRobots(docs, "doc_id").select(col("site"),
+        (size(GraftFunctions.robotsSitemaps(col("robots"))) > 0).as("has_sitemap"))
+      raw.join(canon, Seq("site")).join(adm, Seq("site"), "left")
+        .na.fill(0L, Seq("n_admitted"))
+        .join(sm, Seq("site"))
+        .orderBy("site")
+    },
 
-    "web_robots_report" ->
-      (s"WITH $urlCte, " +
+    // per-site crawlable share: the politeness report a crawl planner reads
+    Query("web_robots_report", corpusGrain = false, Some(
+      s"WITH $urlCte, " +
         """v AS (SELECT doc_id,
           |  (doc_id // 5) % 23 AS s, (doc_id // 5) % 11 AS p2, (doc_id // 5) % 101 AS q2
           |  FROM urls)
@@ -336,6 +316,15 @@ object Web {
           |       ELSE NOT (p2 = (s+1) % 11 AND
           |                 NOT (q2 = 1 OR q2 BETWEEN 10 AND 19 OR q2 = 100)) END)
           |      THEN 1 ELSE 0 END)::BIGINT AS n_allowed
-          |FROM v GROUP BY s ORDER BY site""".stripMargin)
+          |FROM v GROUP BY s ORDER BY site""".stripMargin)) { (s, d) =>
+      val docs = Tables.documents(s, d)
+      robotsFilter(
+        canonicalize(synthesizeUrls(docs, "doc_id"), "raw_url"),
+        synthesizeRobots(docs, "doc_id"), "url")
+        .groupBy("site")
+        .agg(count(lit(1)).as("n_urls"),
+          sum(when(col("allowed"), 1L).otherwise(0L)).as("n_allowed"))
+        .orderBy("site")
+    }
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Sources and sinks: JSON-lines, CSV, partitioned parquet, file streams.
   *
@@ -217,35 +217,39 @@ object Io {
 
   private[graft] val scratch = "/tmp/graft_io"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "src_jsonlines_file" -> ((s, d) => {
+  val queries: Seq[Query] = Seq(
+    Query("src_jsonlines_file", corpusGrain = true, Some(
+      """SELECT event_id, event_type, value FROM events ORDER BY event_id""")) { (s, d) =>
       val out = s"$scratch/jsonl"
       val src = Tables.events(s, d).select("event_id", "event_type", "value")
       writeJsonLines(src, out)
       readJsonLines(s, out, StructType(src.schema.fields))
         .orderBy("event_id")
-    }),
+    },
 
-    "src_csv_roundtrip" -> ((s, d) => {
+    Query("src_csv_roundtrip", corpusGrain = true, Some(
+      """SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""")) { (s, d) =>
       val out = s"$scratch/csv"
       val src = Tables.customer(s, d)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
       writeCsv(src, out)
       readCsv(s, out, StructType(src.schema.fields))
         .orderBy("c_custkey")
-    }),
+    },
 
-    "src_orc_roundtrip" -> ((s, d) => {
+    Query("src_orc_roundtrip", corpusGrain = true, Some(
+      """SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier ORDER BY s_suppkey""")) { (s, d) =>
       val out = s"$scratch/orc"
       val src = Tables.supplier(s, d)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
       writeOrc(src, out)
       readOrc(s, out).orderBy("s_suppkey")
-    }),
+    },
 
     // additive schema evolution: era=0 files lack o_orderpriority; the
     // merged read serves NULL for them and the real value for era=1
-    "src_parquet_merge_schema" -> ((s, d) => {
+    Query("src_parquet_merge_schema", corpusGrain = true, Some(
+      """SELECT o_orderkey, o_totalprice, CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END AS o_orderpriority FROM orders ORDER BY o_orderkey""")) { (s, d) =>
       val out = s"$scratch/evolve"
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
@@ -257,12 +261,13 @@ object Io {
       readMergedSchema(s, out)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
         .orderBy("o_orderkey")
-    }),
+    },
 
     // one-object-per-item blob layout read back through the binaryFile
     // source; content decoded for the compare (ASCII corpus — the same
     // byte/char-unit caveat the levenshtein oracle documents)
-    "src_binary_files" -> ((s, d) => {
+    Query("src_binary_files", corpusGrain = true, Some(
+      """SELECT 'doc_' || doc_id || '.txt' AS file_name, octet_length(text::BLOB)::BIGINT AS n_bytes, text FROM documents WHERE doc_id % 10 = 0 ORDER BY file_name""")) { (s, d) =>
       val out = s"$scratch/blob"
       writeBlobFiles(
         Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
@@ -273,11 +278,12 @@ object Io {
           col("length").as("n_bytes"),
           col("content").cast("string").as("text"))
         .orderBy("file_name")
-    }),
+    },
 
     // the same blob layout as one-document-per-file TEXT (wholetext) —
     // the LLM corpus-drop ingestion shape
-    "src_text_files" -> ((s, d) => {
+    Query("src_text_files", corpusGrain = true, Some(
+      """SELECT 'doc_' || doc_id || '.txt' AS file_name, text FROM documents WHERE doc_id % 10 = 0 ORDER BY file_name""")) { (s, d) =>
       val out = s"$scratch/blob"
       writeBlobFiles(
         Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
@@ -285,16 +291,19 @@ object Io {
       readWholeTextFiles(s, out)
         .select(col("_metadata.file_name").as("file_name"), col("value").as("text"))
         .orderBy("file_name")
-    }),
+    },
 
-    "sink_kv_batches" -> ((s, d) =>
+    Query("sink_kv_batches", corpusGrain = true, Some(
+      """WITH p AS (SELECT user_id % 50 AS pk, to_json(struct_pack(event_id := event_id, event_type := event_type, value := value))::VARCHAR AS payload FROM events), b AS (SELECT pk, payload, (row_number() OVER (PARTITION BY pk ORDER BY payload) - 1) // 25 AS batch_seq FROM p) SELECT pk, batch_seq, count(*) AS n_items, md5(string_agg(payload, chr(10) ORDER BY payload)) AS digest FROM b GROUP BY pk, batch_seq ORDER BY pk, batch_seq""")) { (s, d) =>
       kvBatches(Tables.events(s, d),
         key = pmod(col("user_id"), lit(50)),
         payload = to_json(struct(col("event_id"), col("event_type"), col("value"))),
         batchSize = 25)
-        .orderBy("pk", "batch_seq")),
+        .orderBy("pk", "batch_seq")
+    },
 
-    "sink_partitioned" -> ((s, d) => {
+    Query("sink_partitioned", corpusGrain = false, Some(
+      """SELECT o_orderpriority, count(*) AS n, round(sum(CAST(o_totalprice AS DECIMAL(20,6))), 2)::DOUBLE AS sum_price FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")) { (s, d) =>
       val out = s"$scratch/part"
       writePartitioned(
         Tables.orders(s, d).select("o_orderkey", "o_totalprice", "o_orderpriority"),
@@ -303,25 +312,6 @@ object Io {
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n"),
           graft.operators.Stable.sumRounded(col("o_totalprice"), 2).as("sum_price"))
         .orderBy("o_orderpriority")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "src_jsonlines_file" ->
-      """SELECT event_id, event_type, value FROM events ORDER BY event_id""",
-    "src_csv_roundtrip" ->
-      """SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""",
-    "src_orc_roundtrip" ->
-      """SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier ORDER BY s_suppkey""",
-    "src_parquet_merge_schema" ->
-      """SELECT o_orderkey, o_totalprice, CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END AS o_orderpriority FROM orders ORDER BY o_orderkey""",
-    "sink_partitioned" ->
-      """SELECT o_orderpriority, count(*) AS n, round(sum(CAST(o_totalprice AS DECIMAL(20,6))), 2)::DOUBLE AS sum_price FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "src_binary_files" ->
-      """SELECT 'doc_' || doc_id || '.txt' AS file_name, octet_length(text::BLOB)::BIGINT AS n_bytes, text FROM documents WHERE doc_id % 10 = 0 ORDER BY file_name""",
-    "src_text_files" ->
-      """SELECT 'doc_' || doc_id || '.txt' AS file_name, text FROM documents WHERE doc_id % 10 = 0 ORDER BY file_name""",
-    "sink_kv_batches" ->
-      """WITH p AS (SELECT user_id % 50 AS pk, to_json(struct_pack(event_id := event_id, event_type := event_type, value := value))::VARCHAR AS payload FROM events), b AS (SELECT pk, payload, (row_number() OVER (PARTITION BY pk ORDER BY payload) - 1) // 25 AS batch_seq FROM p) SELECT pk, batch_seq, count(*) AS n_items, md5(string_agg(payload, chr(10) ORDER BY payload)) AS digest FROM b GROUP BY pk, batch_seq ORDER BY pk, batch_seq"""
+    }
   )
 }

@@ -171,11 +171,12 @@ class PlanAuditSpec extends SparkSpec {
     // Sort(global=true) = distributed range sort, Sort(global=false) over
     // Repartition(1) = the local answer sort.
     import org.apache.spark.sql.catalyst.plans.logical.Sort
-    SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
+    SparkEntry.registry.sortBy(_.name).foreach { rec =>
+      val q = rec.name
       val df = run(q)
       df.queryExecution.optimizedPlan match {
         case Sort(_, global, _, _) =>
-          if (SparkEntry.corpusGrainQueries(q))
+          if (rec.corpusGrain)
             assert(global,
               s"$q: corpus-grain output funnels through a one-task local sort")
           else
@@ -183,7 +184,7 @@ class PlanAuditSpec extends SparkSpec {
               s"$q: answer-sized output pays a range-sampling pass")
         case _ => // no trailing sort at the root (TakeOrdered pagination etc.)
       }
-      if (!SparkEntry.corpusGrainQueries(q))
+      if (!rec.corpusGrain)
         assert(!plan(df).contains("rangepartitioning"),
           s"$q plans a range sort:\n${plan(df).take(1500)}")
     }
@@ -357,16 +358,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(!fc.contains("CartesianProduct"), fc.take(1500))
   }
 
-  test("corpusGrainQueries: no dead entries, and measured grain implies membership") {
+  test("corpus grain: measured grain implies membership") {
     // The presentation-sort audit above derives its expected shape from
-    // corpusGrainQueries itself, so on its own it is circular: a future
-    // corpus-grain registration omitted from the set would pass while
-    // funnelling its output through one task, and a typo'd entry is
-    // silently inert. Two independent checks close that:
-    // (1) every set entry names a registered query;
-    val dead = SparkEntry.corpusGrainQueries -- SparkEntry.queries.keySet
-    assert(dead.isEmpty, s"corpusGrainQueries entries match no registered query: $dead")
-    // (2) the membership criterion is re-MEASURED, not trusted: count
+    // each record's declared grain, so on its own it is circular: a
+    // future corpus-grain registration declared `corpusGrain = false`
+    // would pass while funnelling its output through one task. So the
+    // membership criterion is re-MEASURED, not trusted: count
     // every query's output at sf0.001 and sf0.01 and apply the documented
     // criterion at test scale — >= 200 rows at sf0.01 (the 2000-at-sf0.1
     // threshold, linear grain) AND >= 3x growth across the decade (which
@@ -385,8 +382,7 @@ class PlanAuditSpec extends SparkSpec {
     // their growth from sf0.01 to sf0.1. The second decade measures
     // queries with ≥ 100 rows at sf0.01 and flags ≥ 3× growth landing
     // ≥ 1000 rows at sf0.1.
-    val missing = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(SparkEntry.corpusGrainQueries)
+    val missing = SparkEntry.registry.filterNot(_.corpusGrain).map(_.name).sorted
       .flatMap { q =>
         val n01 = SparkEntry.queries(q)(spark, sf01).count()
         val firstDecade = n01 >= 200 && {
@@ -400,7 +396,7 @@ class PlanAuditSpec extends SparkSpec {
         if (firstDecade || secondDecade) Some(q) else None
       }
     assert(missing.isEmpty,
-      s"measured corpus-grain queries missing from corpusGrainQueries " +
+      s"measured corpus-grain queries declared corpusGrain = false " +
         s"(their presentation sort funnels through one task): $missing")
   }
 

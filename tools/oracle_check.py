@@ -15,9 +15,15 @@ for t in glob.glob(f"{sf}/*.parquet"):
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 fails, passes, skips = [], [], []
+# A query that threw in graft.Verify has no output dir, so the dir walk
+# below never sees it: Verify records it in failures.json instead.
+failures_path = f"{out}/failures.json"
+threw = json.load(open(failures_path)) if os.path.exists(failures_path) else {}
+for name, err in sorted(threw.items()):
+    fails.append(f"{name}: (verify threw) {err.splitlines()[0] if err else ''}")
 for name in sorted(os.listdir(out)):
     p = os.path.join(out, name)
-    if not os.path.isdir(p):
+    if not os.path.isdir(p) or name in threw:
         continue
     got = pd.read_parquet(p)
     if name not in oracle:
